@@ -39,6 +39,10 @@ class CachedQueryEngine:
         # drop on ANY invalidation). Lets invalidate_table keep cached
         # SQL results that never touched the invalidated table.
         self._plan_participants: dict[str, frozenset[str] | None] = {}
+        # table_id -> snapshot-aware catalog (register_catalog_table)
+        self._catalogs: dict[str, object] = {}
+        # (table_id, column) -> EntryBloomIndex (attach_bloom)
+        self._blooms: dict[tuple[str, str], object] = {}
         ensure_session_defaults(spark)
 
     # -- table registration -------------------------------------------------
@@ -57,7 +61,6 @@ class CachedQueryEngine:
         a table commit is automatically a cache miss — the semantics the
         reference's PartitionInfo.get_cache_key intended (ref
         ``src/core/cache_data_model.py:41-49``)."""
-        self._catalogs = getattr(self, "_catalogs", {})
         self._catalogs[table_id] = catalog
         self.register_loader(table_id, lambda: catalog.read_table(table_id))
 
@@ -73,7 +76,7 @@ class CachedQueryEngine:
         )
 
     def _snapshot_of(self, table_id: str) -> str | None:
-        catalog = getattr(self, "_catalogs", {}).get(table_id)
+        catalog = self._catalogs.get(table_id)
         if catalog is None:
             return None
         try:
@@ -196,7 +199,7 @@ class CachedQueryEngine:
         re-run, never a stale hit."""
         plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
         base = str(plan.canonicalized().semanticHash())
-        catalogs = getattr(self, "_catalogs", {})
+        catalogs = self._catalogs
         if not catalogs:
             return base
         participants = self._plan_tables(df)
@@ -217,7 +220,6 @@ class CachedQueryEngine:
         by point_lookup to prove absence without running a Spark job."""
         from iceberg_cache_spark.cache.bloom import EntryBloomIndex
 
-        self._blooms = getattr(self, "_blooms", {})
         self._blooms[(table_id, column)] = EntryBloomIndex(
             self.table(table_id), column, **bloom_kwargs
         )
@@ -226,7 +228,7 @@ class CachedQueryEngine:
         """Equality lookup. If a bloom index proves the value absent the
         cached *empty* projection returns immediately — no scan, no job;
         otherwise a normal filtered read of the cached table."""
-        bloom = getattr(self, "_blooms", {}).get((table_id, column))
+        bloom = self._blooms.get((table_id, column))
         df = self.table(table_id)
         if bloom is not None and bloom.definitely_absent(value):
             return df.limit(0)
@@ -240,9 +242,8 @@ class CachedQueryEngine:
         # add keys the bloom has never seen, turning definitely_absent
         # into a wrong (stale) answer. Drop them; attach_bloom rebuilds
         # on demand from the fresh cached table.
-        blooms = getattr(self, "_blooms", {})
-        for bkey in [k for k in blooms if k[0] == table_id]:
-            del blooms[bkey]
+        for bkey in [k for k in self._blooms if k[0] == table_id]:
+            del self._blooms[bkey]
         # Cached SQL results: drop exactly the __plan# entries whose
         # analyzed plan read this table (participation tracked at put
         # time via _plan_tables). Entries with unknown participation

@@ -5,6 +5,7 @@ SQL-in-ticket path the reference left as a stub."""
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -281,4 +282,130 @@ def test_sql_ticket_adaptive_parity_multi_partition(spark, sf_dir):
         # the engine's cache persisted lineitem; a leaked InMemoryRelation
         # would get substituted into OTHER tests' scans (Spark caches by
         # semantic plan equality), wrecking their column-pruning plans
+        engine.cache.clear()
+
+
+class _GroupedServer(SparkFlightServer):
+    """Puts each RPC's Spark jobs in a fresh job group, set on the
+    handler thread the way a per-request tracer sets it, so a test can
+    count the jobs one call ran — including the jobs a reply stream
+    runs after ``do_get`` has returned."""
+
+    _ids = itertools.count()
+
+    def _tag(self, label: str) -> None:
+        self.group = f"flight-test-{label}-{next(self._ids)}"
+        self.engine.spark.sparkContext.setJobGroup(self.group, label)
+
+    def do_get(self, context, ticket):  # noqa: D102
+        self._tag("do_get")
+        return super().do_get(context, ticket)
+
+    def get_flight_info(self, context, descriptor):  # noqa: D102
+        self._tag("info")
+        return super().get_flight_info(context, descriptor)
+
+    def list_flights(self, context, criteria):  # noqa: D102
+        self._tag("list")
+        yield from super().list_flights(context, criteria)
+
+    def jobs(self) -> list[int]:
+        sc = self.engine.spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store caught up
+        return list(sc.statusTracker().getJobIdsForGroup(self.group))
+
+
+def _ungrouped_jobs(spark) -> set[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_flight_reads_run_only_the_querys_own_jobs(spark, sf_dir):
+    """A read runs its own plan and nothing else: no schema-probe job,
+    no second plan around the result. Job-free loaders keep the count
+    about the serving layer (a parquet loader's own footer read would
+    add one job to every call that loads)."""
+    import pyarrow.flight as flight
+
+    from iceberg_cache_spark.cache import CacheManager
+    from iceberg_cache_spark.serving.flight import _estimate_trustworthy
+
+    ranged = spark.range(0, 5000, 1, 1).selectExpr("id", "id % 7 AS k")
+    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    region = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
+    engine = CachedQueryEngine(spark, CacheManager(capacity_bytes=10**9))
+    engine.register_loader("ranged", lambda: ranged)
+    engine.register_loader("nation", lambda: nation)
+    engine.register_loader("region", lambda: region)
+    for t in ("ranged", "nation", "region"):
+        engine.table(t)  # resident and materialised
+    srv = _GroupedServer(engine, "grpc://127.0.0.1:0")
+    serve_background(srv)
+    client = flight.connect(f"grpc://127.0.0.1:{srv.port}")
+    try:
+        # resident single-partition table: exactly the one toArrow job,
+        # run in the caller's group although the reply streams later
+        before = _ungrouped_jobs(spark)
+        got = client.do_get(flight.Ticket(b"ranged")).read_all()
+        assert len(srv.jobs()) == 1
+        assert _ungrouped_jobs(spark) == before
+        assert got.equals(engine.table("ranged").toArrow())
+
+        keys = sorted(engine.cache.keys())
+        info = client.get_flight_info(flight.FlightDescriptor.for_path("ranged"))
+        assert info.schema == got.schema
+        assert srv.jobs() == []
+        assert sorted(engine.cache.keys()) == keys
+
+        # a streamed read (outer joins distrust their estimate) equals
+        # toArrow, and every job it ran stayed in the caller's group
+        sql = (
+            "SELECT n.n_name, r.r_name FROM nation n "
+            "LEFT JOIN region r ON n.n_regionkey = r.r_regionkey "
+            "AND r.r_name LIKE 'A%' ORDER BY n.n_name"
+        )
+        assert not _estimate_trustworthy(engine.sql(sql))
+        before = _ungrouped_jobs(spark)
+        got = client.do_get(flight.Ticket(f"sql:{sql}".encode())).read_all()
+        streamed = srv.jobs()
+        assert _ungrouped_jobs(spark) == before
+        # the same jobs toArrow runs for the plan (its result coalesces
+        # to one partition): no probe, no second plan around it
+        spark.sparkContext.setJobGroup("flight-test-toarrow", "toArrow")
+        want = engine.sql(sql).toArrow()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        own = spark.sparkContext.statusTracker().getJobIdsForGroup("flight-test-toarrow")
+        assert len(streamed) == len(own) >= 1
+        assert got.num_rows == 25
+        assert got.equals(want)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+        srv.shutdown()
+        engine.cache.clear()
+
+
+def test_list_flights_leaves_the_cache_alone(spark):
+    """Metadata calls resolve table tickets without admission: under a
+    budget that fits one entry, listing every table neither evicts the
+    resident one nor admits the others, and runs no Spark job."""
+    import pyarrow.flight as flight
+
+    from iceberg_cache_spark.cache import CacheManager
+
+    frames = {t: spark.range(0, 100 * (i + 1)) for i, t in enumerate("abc")}
+    engine = CachedQueryEngine(spark, CacheManager(capacity_bytes=1))
+    for t, df in frames.items():
+        engine.register_loader(t, lambda df=df: df)
+    engine.table("a")  # the hot entry, alone over budget
+    keys = engine.cache.keys()
+    srv = _GroupedServer(engine, "grpc://127.0.0.1:0")
+    serve_background(srv)
+    try:
+        client = flight.connect(f"grpc://127.0.0.1:{srv.port}")
+        listed = sorted(f.descriptor.path[0].decode() for f in client.list_flights())
+        assert listed == ["a", "b", "c"]
+        assert engine.cache.keys() == keys
+        assert srv.jobs() == []
+    finally:
+        srv.shutdown()
         engine.cache.clear()

@@ -227,7 +227,7 @@ def test_flight_no_per_row_python_conversion():
     src = inspect.getsource(fl)
     for marker in ("from_pydict", "asDict", "_plain", "_rows_to_batch"):
         assert marker not in src, f"row-at-a-time path resurfaced: {marker}"
-    assert "mapInArrow" in src
+    assert "toArrowBatchRdd" in src  # JVM-encoded columnar stream
 
 
 def test_flight_batches_respect_batch_size(spark, sf_dir):
