@@ -222,15 +222,6 @@ class CacheManager:
             except Exception:
                 pass
 
-    def drop_prefix(self, prefix: str) -> int:
-        """Drop every entry whose string key starts with ``prefix``
-        (e.g. ``__plan#`` — the engine's cached-SQL-result namespace)."""
-        with self._lock:
-            victims = [k for k in self._entries if k.startswith(prefix)]
-            for k in victims:
-                self._drop(k)
-            return len(victims)
-
     def drop_keys(self, keys) -> int:
         """Drop exactly the named entries (engine-side participation
         tracking decides WHICH plan-cache entries a table commit

@@ -4,9 +4,9 @@ The reference sketched this as an empty ``CacheConfig`` placeholder and
 a docstring example (ref ``src/core/config.py``) plus an abstract
 ``CacheStrategy`` (ref ``src/core/cache_strategies.py``) nothing
 implemented. Here the config is a real dataclass wired into a factory
-that assembles session, cache, engine, and (optionally) the Flight
-server — the "spin up the cache in your own system" path the reference
-promised.
+that assembles session, cache and engine — the "spin up the cache in
+your own system" path the reference promised. Front the engine with
+``serving.flight.SparkFlightServer`` to serve it over Arrow Flight.
 """
 
 from __future__ import annotations
@@ -40,9 +40,6 @@ class EngineConfig:
     ttl_seconds: float = 3600.0
     sweep_seconds: float = 60.0
     start_maintenance: bool = True
-    # serving plane
-    flight_location: str | None = None  # e.g. "grpc://0.0.0.0:8815"
-    flight_batch_size: int = 10_000
     # tables: table_id -> parquet path (Iceberg tables register via
     # engine.register_catalog_table after construction)
     parquet_tables: dict[str, str] = field(default_factory=dict)
@@ -74,11 +71,3 @@ def build_engine(config: EngineConfig) -> CachedQueryEngine:
         engine.register_parquet(table_id, path)
     return engine
 
-
-def build_flight_server(config: EngineConfig, engine: CachedQueryEngine | None = None):
-    """Optionally front the engine with the Arrow Flight shim."""
-    from iceberg_cache_spark.serving.flight import SparkFlightServer
-
-    engine = engine or build_engine(config)
-    location = config.flight_location or "grpc://0.0.0.0:8815"
-    return SparkFlightServer(engine, location, config.flight_batch_size)

@@ -142,15 +142,6 @@ def quality_score_e4(col: Column, toks: Column | None = None) -> Column:
     return (_quality_decimal(col, toks=toks) * F.lit(10000)).cast("bigint")
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language marker-hit counts (the n-gram heuristic's evidence)."""
-    toks = tokens(col)
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*markers))).cast("bigint")
-        for lang, markers in _LANG_MARKERS.items()
-    }
-
-
 def lang_id(col: Column, toks: Column | None = None) -> Column:
     """Argmax language with deterministic tie-break (markers chain en >
     de > fr > es in a fixed CASE order); 'und' when no marker hits.
@@ -192,21 +183,6 @@ def fingerprint(col: Column) -> Column:
     lowered = F.translate(col, ASCII_UPPER, ASCII_LOWER)
     normalized = F.regexp_replace(F.trim(lowered), WS_CLASS + "+", " ")
     return F.md5(normalized.cast("binary"))
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis column family."""
-    c = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(c))
-        .withColumn("n_tokens_bpe", bpe_ish_token_count(c))
-        .withColumn("n_chars_computed", char_count(c))
-        .withColumn("punct_ratio", F.round(punct_ratio(c), 4))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(c), 4))
-        .withColumn("quality", quality_score(c))
-        .withColumn("lang_pred", lang_id(c))
-        .withColumn("fp", fingerprint(c))
-    )
 
 
 def gopher_metrics(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -6,27 +6,29 @@ Spark-first plan; ``ORACLE[name]`` is the equivalent ANSI SQL a DuckDB
 oracle runs on the same parquet tables.
 
 Iteration-order contract: the driver verifies the first ~50 entries in
-registry iteration order each round and stops. The registry is ordered
-so that, across rounds, every query accumulates a driver CORRECTNESS
-row, freshest-evidence-last (round-9 protocol, generalized from the
-r6–r8 hand-built tiers):
+registry iteration order each round and stops. The order is derived at
+import time from the driver's committed per-round results, the
+``CORRECTNESS_r{NN}.json`` files at the repository root (never the
+``CORRECTNESS_local_*`` runs), so that every query keeps accumulating
+driver rows with no hand-kept bookkeeping (``registry_order``):
 
-1. HEAD_R9: the four rows the r8 driver left red — q153/q166/q172 and
-   the q170 probe, all on the one DECIMAL-cast construct replaced this
-   round by the portable BIGINT-cents derivation — lead so the fix is
-   certified first,
-2. oracle-matched names with no driver row yet (new queries need a
-   first green),
-3. every other oracle-matched name, STALEST driver evidence first:
-   sorted by the latest round that hash-certified the name (ascending,
-   registry order as tiebreak). The ~50-row window therefore always
-   re-certifies the oldest evidence, and names past the window are by
-   construction the freshest — they roll forward automatically, which
-   retires the per-round DEFER_R{N} bookkeeping (ADVICE r7's window-fit
-   concern falls out of the sort instead of a hand-built set),
-4. rows-only queries LAST: all carry their `no_oracle` rows
-   (r6 burned 6 of 50 slots confirming the driver cannot hash-check
-   them); they spend no further driver slots.
+1. head: oracle-matched names whose row in the newest round is not
+   hash-green — the rows the last driver run left red lead, so their
+   fix is certified first;
+2. oracle-matched names with no hash-green row in any round (new
+   queries need a first green);
+3. every other oracle-matched name, stalest evidence first: sorted by
+   the latest round that hash-certified the name, declaration order as
+   the tiebreak. The ~50-row window therefore always re-certifies the
+   oldest evidence, and the names a round just certified move to the
+   back of this tier;
+4. rows-only queries last: the driver cannot hash-check them and their
+   ``no_oracle`` rows are on record, so they spend no driver slots.
+
+Committing a new ``CORRECTNESS_r{NN}.json`` re-ranks the registry with
+no code edit. Without any result file (an installed package) every
+oracle name lands in tier 2, so the order is declaration order with
+rows-only names last.
 
 This ordering is a coverage protocol, not sampling-steering: the FULL
 corpus is locally verified with the driver's exact canonicalization
@@ -46,6 +48,12 @@ builder (no jobs until an action). Tools that construct plans
 speculatively (explain-only tooling, dry-run schedulers) should expect
 those four to touch the cluster.
 """
+
+from __future__ import annotations
+
+import json
+from collections.abc import Collection, Sequence
+from pathlib import Path
 
 from iceberg_cache_spark.plans.registry import ORACLE, QUERIES, declared
 
@@ -70,427 +78,51 @@ from iceberg_cache_spark.plans import datapipe  # noqa: E402,F401
 from iceberg_cache_spark.plans import sessions  # noqa: E402,F401
 from iceberg_cache_spark.plans import diagnostics  # noqa: E402,F401
 
-# Names the round-1 driver already hash-verified (CORRECTNESS_r01.json).
-DRIVER_VERIFIED_R1 = frozenset(
-    {
-        "q01_projection", "q02_filter", "q03_between_like", "q04_case_when",
-        "q05_cast_coalesce", "q06_distinct", "q10_inner_join", "q11_left_join",
-        "q12_full_join", "q13_semi_join", "q14_anti_join", "q15_cross_join",
-        "q16_theta_join", "q17_multiway_join_agg", "q18_broadcast_join",
-        "q20_groupby_agg", "q21_count_distinct", "q22_having", "q23_rollup",
-        "q24_cube", "q25_scalar_agg", "q26_stddev_var", "q28_grouping_sets",
-        "q29_percentile", "q30_row_number", "q31_lag_lead", "q32_window_frame",
-        "q33_ntile", "q34_topk_per_group", "q35_range_frame",
-        "q36_first_last_nth", "q40_order_limit", "q41_offset", "q42_union_all",
-        "q43_union_distinct", "q44_intersect", "q45_except",
-        "q46_scalar_subquery", "q47_in_subquery", "q48_cte",
-        "q49_string_position", "q50_string_funcs", "q51_regex",
-        "q52_math_funcs", "q53_date_funcs", "q54_timestamp_trunc",
-        "q55_greatest_least", "q56_hash_funcs", "q57_array_funcs", "q58_json",
+_REPO_ROOT = Path(__file__).resolve().parents[2]
+_DECLARED: tuple[str, ...] = tuple(QUERIES)
+
+def driver_rounds(root: Path = _REPO_ROOT) -> list[dict[str, dict]]:
+    """The committed driver results under ``root``, oldest round first:
+    one ``{name: row}`` dict per ``CORRECTNESS_r{NN}.json``."""
+    paths = sorted(Path(root).glob("CORRECTNESS_r[0-9][0-9].json"))
+    return [json.loads(p.read_text()) for p in paths]
+
+
+def last_green(rounds: Sequence[dict[str, dict]]) -> dict[str, int]:
+    """name -> index of the newest round whose row for it is hash-green."""
+    return {
+        name: i
+        for i, rows in enumerate(rounds)
+        for name, row in rows.items()
+        if row.get("hash_match")
     }
-)
-
-# Names the round-2 driver hash-verified green (CORRECTNESS_r02.json;
-# q96 excluded — its row was a canonicalizer ERR, not a pass).
-DRIVER_VERIFIED_R2 = frozenset(
-    {
-        "q19_tpch_q3", "q37_posexplode", "q38_struct_map", "q39_asof_join",
-        "q59_ts_arith", "q60_exact_dedup", "q61_fingerprint_dedup",
-        "q64_ngram_jaccard", "q65_token_stats", "q66_quality_score",
-        "q67_lang_id", "q68_pii_scrub", "q69_quality_filter",
-        "q70_cosine_topk", "q74_ppjoin_jaccard", "q75_pivot",
-        "q76_values_inline", "q77_except_all", "q78_intersect_all",
-        "q79_correlated_exists_ineq", "q80_tumbling_window",
-        "q81_session_window", "q82_sliding_window", "q86_range_join",
-        "q87_hypertable_rollup", "q88_count_min_sketch", "q89_grouped_zscore",
-        "q90_multimodal_features", "q91_doc_chunking", "q92_pandas_udf_norm",
-        "q93_bpe_token_stats", "q94_vocabulary", "q95_sentence_udtf",
-        "q97_random_projection", "q98_corr_covar", "q99_bit_aggs",
-        "q100_string_agg", "q101_conditional_aggs", "q102_date_format",
-        "q103_more_strings", "q104_null_safe_eq", "q105_rank_fns",
-        "q106_keep_latest", "q107_stratified_sample", "q108_train_split",
-        "q109_contamination_check", "q110_repetition_ratio",
-        "q111_length_histogram", "q112_shuffle_order",
-    }
-)
 
 
-# Names the round-3 driver hash-verified green (CORRECTNESS_r03.json) —
-# includes the q01–q11 re-certifications, which therefore now carry the
-# FRESHEST evidence and sort behind the stale r1/r2 tiers.
-DRIVER_VERIFIED_R3 = frozenset(
-    {
-        "q120_tpch_q7", "q121_tpch_q8", "q122_tpch_q10",
-        "q123_late_shipments", "q124_tpch_q14", "q125_small_qty_revenue",
-        "q96_embedding_quantize", "q113_keep_best_quality",
-        "q114_sequence_packing", "q115_curation_pipeline",
-        "q116_dedup_clusters", "q117_gopher_rules", "q118_boilerplate_grams",
-        "q119_domain_reweight", "q128_stream_interval_join",
-        "q129_packed_manifest", "q130_funnel", "q131_retention_cohorts",
-        "q132_tpch_q2", "q133_tpch_q4", "q134_tpch_q6", "q135_tpch_q9",
-        "q136_tpch_q11", "q137_tpch_q13", "q138_tpch_q15", "q139_tpch_q16",
-        "q140_tpch_q18", "q141_tpch_q19", "q142_tpch_q20", "q143_tpch_q21",
-        "q144_tpch_q22", "q145_chunk_dedup", "q147_zorder_layout",
-        "q01_projection", "q02_filter", "q03_between_like", "q04_case_when",
-        "q05_cast_coalesce", "q06_distinct", "q10_inner_join", "q11_left_join",
-    }
-)
+def registry_order(
+    names: Sequence[str],
+    oracle: Collection[str],
+    rounds: Sequence[dict[str, dict]],
+) -> list[str]:
+    """``names`` (in declaration order) ranked into the module
+    docstring's four tiers from the per-round driver ``rounds``; the
+    stable sort keeps declaration order within a rank."""
+    fresh = last_green(rounds)
+    newest = rounds[-1] if rounds else {}
 
+    def rank(n: str) -> tuple[int, int]:
+        if n not in oracle:
+            return (3, 0)
+        if n in newest and not newest[n].get("hash_match"):
+            return (0, 0)
+        if n not in fresh:
+            return (1, 0)
+        return (2, fresh[n])
 
-# Names the round-4 driver hash-verified green (CORRECTNESS_r04.json:
-# 50/50 — the 47 stalest r1 names plus the three new dedup queries).
-DRIVER_VERIFIED_R4 = frozenset(
-    {
-        "q12_full_join", "q13_semi_join", "q14_anti_join", "q15_cross_join",
-        "q16_theta_join", "q17_multiway_join_agg", "q18_broadcast_join",
-        "q20_groupby_agg", "q21_count_distinct", "q22_having", "q23_rollup",
-        "q24_cube", "q25_scalar_agg", "q26_stddev_var", "q28_grouping_sets",
-        "q29_percentile", "q30_row_number", "q31_lag_lead", "q32_window_frame",
-        "q33_ntile", "q34_topk_per_group", "q35_range_frame",
-        "q36_first_last_nth", "q37_posexplode", "q40_order_limit",
-        "q41_offset", "q42_union_all", "q43_union_distinct", "q44_intersect",
-        "q45_except", "q46_scalar_subquery", "q47_in_subquery", "q48_cte",
-        "q49_string_position", "q50_string_funcs", "q51_regex",
-        "q52_math_funcs", "q53_date_funcs", "q54_timestamp_trunc",
-        "q55_greatest_least", "q56_hash_funcs", "q57_array_funcs", "q58_json",
-        "q59_ts_arith", "q75_pivot", "q76_values_inline", "q77_except_all",
-        "q148_dedup_clusters_star", "q149_incremental_dedup",
-        "q150_dedup_apply",
-    }
-)
-
-
-# Historical round-6 head / deferral (kept for the audit trail; no
-# longer drive the ordering — every rows-only name now has its
-# `no_oracle` row and sorts last wholesale).
-HEAD_R6 = ("q153_rolling_window", "q151_semdedup_apply")
-DEFER_R6 = frozenset(
-    {
-        "q27_approx_count_distinct",
-        "q63_simhash_near_dup",
-        "q71_lsh_cosine_topk",
-    }
-)
-
-# Historical round-7 head (audit trail; superseded by HEAD_R8).
-HEAD_R7 = ("q153_rolling_window",)
-
-# Round-8 head: the driver-red rolling pair first (now carrying the
-# prefix-sum oracle rewrite — plans/sessions.py), then the three
-# one-construct diagnostic probes that localize any residual red
-# (plans/diagnostics.py), then the new auto-plan query.
-HEAD_R8 = (
-    "q153_rolling_window",
-    "q166_rolling_window_chunked",
-    "q169_range_frame_probe",
-    "q170_decimal_cast_probe",
-    "q171_epoch_us_probe",
-    "q172_rolling_window_auto",
-)
-
-# Stale-r5 names deferred to round 9 so tiers 0–1 total exactly the
-# driver's ~50-row verification window (6 head + 44 re-certifications;
-# ADVICE r7: round 7 oversized the tiers to 61 and ~11 stale names
-# silently missed re-certification). All four already carry TWO green
-# driver rows (r2 + r5), so they are the lowest-risk names to roll.
-# Historical (r8 audit trail): the r9 freshness-rank ordering below
-# re-certifies these four automatically (their freshest row is r5).
-DEFER_R8 = frozenset(
-    {
-        "q100_string_agg",
-        "q101_conditional_aggs",
-        "q102_date_format",
-        "q103_more_strings",
-    }
-)
-
-# Round-9 head: the four rows the r8 driver left red — all on ONE
-# construct, the double→DECIMAL(18,2) value cast, replaced this round
-# by the portable BIGINT-cents derivation (plans/sessions.py). q170 is
-# the one-construct probe now carrying the replacement derivation; a
-# green quartet certifies the three-round investigation closed.
-HEAD_R9 = (
-    "q153_rolling_window",
-    "q166_rolling_window_chunked",
-    "q170_decimal_cast_probe",
-    "q172_rolling_window_auto",
-)
-
-# Round 13: the r12 driver left ZERO reds. q190 leads because its
-# EXPRESSION changed this round (ADVICE r12: the e6 fixed-point
-# products now go through DECIMAL(38,0)/HUGEINT 128-bit intermediates
-# so they can't wrap at the 100 TB design point) — values are
-# identical at gate scale, but a changed plan warrants a fresh driver
-# row ahead of the stale-evidence rotation, same precedent as the r12
-# decontam-triad head. The new q191 lands in tier 1 (no driver row
-# yet) automatically; the 28-name r9-stale band fills the rest of the
-# window via tier 2 (VERDICT r12 Next #3).
-HEAD_CURRENT: tuple[str, ...] = ("q190_source_mixture_plan",)
-
-
-def _priority(name: str) -> tuple[int, int, int]:
-    """Round-9 protocol, generalized: freshness-rank rotation.
-
-    (0) HEAD_CURRENT — the driver-red rows carrying this round's fix;
-    (1) oracle-matched names with NO driver row yet (new queries need
-        their first green);
-    (2) every other oracle-matched name, STALEST driver evidence
-        first (freshest certifying round ascending, registry order as
-        tiebreak) — so the driver's ~50-row window always re-certifies
-        the names whose hash evidence is oldest, and every name keeps
-        accumulating rows round-robin without hand-built DEFER sets
-        (the r7/r8 window-fit bookkeeping falls out automatically:
-        names past the window are by construction the freshest and
-        roll to the next round);
-    (3) rows-only names dead last — all carry their `no_oracle` rows;
-        they spend no driver slots.
-    """
-    order = list(QUERIES).index(name)
-    if name in HEAD_CURRENT:
-        return (0, HEAD_CURRENT.index(name), order)
-    if name not in ORACLE:
-        return (3, 0, order)
-    freshest = _FRESHEST_ROUND.get(name)
-    if freshest is None:
-        return (1, 0, order)  # new this round: needs a first driver row
-    return (2, freshest, order)
-
-
-# Names the round-5 driver verified (CORRECTNESS_r05.json): 48 hash-green
-# plus q62's rows-only row. q153 was sampled but RED (all-NULL-frame sum
-# contract, since fixed) so it is deliberately excluded here and re-led
-# via HEAD_R6.
-DRIVER_VERIFIED_R5 = frozenset(
-    {
-        "q100_string_agg", "q101_conditional_aggs", "q102_date_format",
-        "q103_more_strings", "q104_null_safe_eq", "q105_rank_fns",
-        "q106_keep_latest", "q107_stratified_sample", "q108_train_split",
-        "q109_contamination_check", "q110_repetition_ratio",
-        "q111_length_histogram", "q112_shuffle_order", "q152_sessionization",
-        "q154_normalized_dedup", "q155_tfidf_top_terms", "q156_session_funnel",
-        "q19_tpch_q3", "q38_struct_map", "q39_asof_join", "q60_exact_dedup",
-        "q61_fingerprint_dedup", "q62_minhash_near_dup", "q64_ngram_jaccard",
-        "q65_token_stats", "q66_quality_score", "q67_lang_id", "q68_pii_scrub",
-        "q69_quality_filter", "q70_cosine_topk", "q74_ppjoin_jaccard",
-        "q78_intersect_all", "q79_correlated_exists_ineq",
-        "q80_tumbling_window", "q81_session_window", "q82_sliding_window",
-        "q86_range_join", "q87_hypertable_rollup", "q88_count_min_sketch",
-        "q89_grouped_zscore", "q90_multimodal_features", "q91_doc_chunking",
-        "q92_pandas_udf_norm", "q93_bpe_token_stats", "q94_vocabulary",
-        "q95_sentence_udtf", "q97_random_projection", "q98_corr_covar",
-        "q99_bit_aggs",
-    }
-)
-
-
-# Names the round-6 driver hash-verified green (CORRECTNESS_r06.json:
-# 43 hash rows — first-attempt green for the new q157/q158 and the
-# whole stale-r3 tier; the 6 rows-only names sampled got their
-# `no_oracle` rows and q153 stayed red, so neither appears here).
-DRIVER_VERIFIED_R6 = frozenset(
-    {
-        "q01_projection", "q02_filter", "q03_between_like", "q04_case_when",
-        "q05_cast_coalesce", "q06_distinct", "q10_inner_join",
-        "q113_keep_best_quality", "q114_sequence_packing",
-        "q115_curation_pipeline", "q116_dedup_clusters", "q117_gopher_rules",
-        "q118_boilerplate_grams", "q119_domain_reweight", "q11_left_join",
-        "q120_tpch_q7", "q121_tpch_q8", "q122_tpch_q10",
-        "q123_late_shipments", "q124_tpch_q14", "q125_small_qty_revenue",
-        "q128_stream_interval_join", "q129_packed_manifest", "q130_funnel",
-        "q131_retention_cohorts", "q132_tpch_q2", "q133_tpch_q4",
-        "q134_tpch_q6", "q135_tpch_q9", "q136_tpch_q11", "q137_tpch_q13",
-        "q138_tpch_q15", "q139_tpch_q16", "q140_tpch_q18", "q141_tpch_q19",
-        "q142_tpch_q20", "q143_tpch_q21", "q144_tpch_q22",
-        "q145_chunk_dedup", "q147_zorder_layout", "q157_null_profile",
-        "q158_cluster_size_histogram", "q96_embedding_quantize",
-    }
-)
-
-
-# Names the round-7 driver hash-verified green (CORRECTNESS_r07.json:
-# 48 hash rows — first-attempt green for 9 of the 10 new r7 queries
-# (q159–q165, q167, q168) and the whole stale-r4 relational tier;
-# q153/q166 stayed red on the RANGE-offset oracle construct, since
-# rewritten — they re-lead via HEAD_R8).
-DRIVER_VERIFIED_R7 = frozenset(
-    {
-        "q12_full_join", "q13_semi_join", "q14_anti_join", "q15_cross_join",
-        "q16_theta_join", "q17_multiway_join_agg", "q18_broadcast_join",
-        "q159_repeated_spans", "q160_weighted_sample", "q161_mixture_sample",
-        "q162_percentile_clip", "q163_unigram_logprob",
-        "q164_pmi_collocations", "q165_token_novelty",
-        "q167_sessionization_chunked", "q168_session_funnel_chunked",
-        "q20_groupby_agg", "q21_count_distinct", "q22_having", "q23_rollup",
-        "q24_cube", "q25_scalar_agg", "q26_stddev_var", "q28_grouping_sets",
-        "q29_percentile", "q30_row_number", "q31_lag_lead", "q32_window_frame",
-        "q33_ntile", "q34_topk_per_group", "q40_order_limit", "q41_offset",
-        "q42_union_all", "q43_union_distinct", "q44_intersect", "q45_except",
-        "q46_scalar_subquery", "q47_in_subquery", "q48_cte",
-        "q50_string_funcs", "q51_regex", "q52_math_funcs", "q53_date_funcs",
-        "q54_timestamp_trunc", "q55_greatest_least", "q56_hash_funcs",
-        "q57_array_funcs", "q58_json",
-    }
-)
-
-
-# Names the round-8 driver hash-verified green (CORRECTNESS_r08.json:
-# 46 hash rows — the whole stale-r5 tier re-certified plus first-green
-# rows for the q169/q171 probes; q153/q166/q170/q172 stayed red on the
-# DECIMAL-cast construct, since replaced — they re-lead via HEAD_R9).
-DRIVER_VERIFIED_R8 = frozenset(
-    {
-        "q104_null_safe_eq", "q105_rank_fns", "q106_keep_latest",
-        "q107_stratified_sample", "q108_train_split",
-        "q109_contamination_check", "q110_repetition_ratio",
-        "q111_length_histogram", "q112_shuffle_order",
-        "q152_sessionization", "q154_normalized_dedup",
-        "q155_tfidf_top_terms", "q156_session_funnel",
-        "q169_range_frame_probe", "q171_epoch_us_probe", "q19_tpch_q3",
-        "q38_struct_map", "q39_asof_join", "q60_exact_dedup",
-        "q61_fingerprint_dedup", "q64_ngram_jaccard", "q65_token_stats",
-        "q66_quality_score", "q67_lang_id", "q68_pii_scrub",
-        "q69_quality_filter", "q70_cosine_topk", "q74_ppjoin_jaccard",
-        "q78_intersect_all", "q79_correlated_exists_ineq",
-        "q80_tumbling_window", "q81_session_window", "q82_sliding_window",
-        "q86_range_join", "q87_hypertable_rollup", "q88_count_min_sketch",
-        "q89_grouped_zscore", "q90_multimodal_features", "q91_doc_chunking",
-        "q92_pandas_udf_norm", "q93_bpe_token_stats", "q94_vocabulary",
-        "q95_sentence_udtf", "q97_random_projection", "q98_corr_covar",
-        "q99_bit_aggs",
-    }
-)
-
-
-# Names the round-9 driver hash-verified green (CORRECTNESS_r09.json:
-# all 50 sampled rows — the HEAD_R9 quartet certifying the BIGINT-cents
-# fix, first greens for q173–q176, and the stale-r6 tier re-certified).
-DRIVER_VERIFIED_R9 = frozenset(
-    {
-        "q01_projection", "q02_filter", "q03_between_like", "q04_case_when",
-        "q05_cast_coalesce", "q06_distinct", "q100_string_agg",
-        "q101_conditional_aggs", "q102_date_format", "q103_more_strings",
-        "q10_inner_join", "q113_keep_best_quality", "q114_sequence_packing",
-        "q115_curation_pipeline", "q116_dedup_clusters", "q117_gopher_rules",
-        "q118_boilerplate_grams", "q119_domain_reweight", "q11_left_join",
-        "q120_tpch_q7", "q121_tpch_q8", "q122_tpch_q10",
-        "q123_late_shipments", "q124_tpch_q14", "q125_small_qty_revenue",
-        "q128_stream_interval_join", "q129_packed_manifest", "q130_funnel",
-        "q131_retention_cohorts", "q132_tpch_q2", "q148_dedup_clusters_star",
-        "q149_incremental_dedup", "q150_dedup_apply", "q153_rolling_window",
-        "q166_rolling_window_chunked", "q170_decimal_cast_probe",
-        "q172_rolling_window_auto", "q173_media_decode_roundtrip",
-        "q174_span_excision", "q175_gapfill_locf", "q176_gapfill_interpolate",
-        "q35_range_frame", "q36_first_last_nth", "q37_posexplode",
-        "q49_string_position", "q59_ts_arith", "q75_pivot",
-        "q76_values_inline", "q77_except_all", "q96_embedding_quantize",
-    }
-)
-
-
-# Names the round-10 driver hash-verified green (CORRECTNESS_r10.json:
-# 49 of 50 sampled rows — first greens for q177/q178/q180/q181/q182,
-# the stale-r7 relational tier re-certified; q179 was the round's one
-# red, re-led via HEAD_CURRENT with its round-11 type-parity fix).
-DRIVER_VERIFIED_R10 = frozenset(
-    {
-        "q12_full_join", "q133_tpch_q4", "q134_tpch_q6", "q135_tpch_q9",
-        "q136_tpch_q11", "q137_tpch_q13", "q138_tpch_q15", "q139_tpch_q16",
-        "q13_semi_join", "q140_tpch_q18", "q141_tpch_q19", "q142_tpch_q20",
-        "q143_tpch_q21", "q144_tpch_q22", "q145_chunk_dedup",
-        "q147_zorder_layout", "q14_anti_join", "q157_null_profile",
-        "q158_cluster_size_histogram", "q15_cross_join", "q16_theta_join",
-        "q177_perceptual_near_dup", "q178_span_excision_rewrite",
-        "q17_multiway_join_agg", "q180_benchmark_decontam",
-        "q181_image_resize_roundtrip", "q182_audio_resample_roundtrip",
-        "q18_broadcast_join", "q20_groupby_agg", "q21_count_distinct",
-        "q22_having", "q23_rollup", "q24_cube", "q25_scalar_agg",
-        "q26_stddev_var", "q30_row_number", "q31_lag_lead", "q32_window_frame",
-        "q33_ntile", "q34_topk_per_group", "q40_order_limit", "q41_offset",
-        "q42_union_all", "q43_union_distinct", "q44_intersect", "q45_except",
-        "q46_scalar_subquery", "q47_in_subquery", "q48_cte"
-    }
-)
-
-
-# Names the round-11 driver hash-verified green (CORRECTNESS_r11.json:
-# all 50 sampled rows — first greens for the r11 apply/accounting tier
-# q183–q187, the q179 type-parity fix certified, and the stale-r8 band
-# re-certified).
-DRIVER_VERIFIED_R11 = frozenset(
-    {
-        "q104_null_safe_eq", "q105_rank_fns", "q159_repeated_spans",
-        "q160_weighted_sample", "q161_mixture_sample", "q162_percentile_clip",
-        "q163_unigram_logprob", "q164_pmi_collocations", "q165_token_novelty",
-        "q167_sessionization_chunked", "q168_session_funnel_chunked",
-        "q179_sequence_packing", "q183_token_count_probe", "q184_pack_manifest",
-        "q185_decontam_rewrite", "q186_decontam_accounting", "q187_pack_stats",
-        "q19_tpch_q3", "q28_grouping_sets", "q29_percentile", "q38_struct_map",
-        "q50_string_funcs", "q51_regex", "q52_math_funcs", "q53_date_funcs",
-        "q54_timestamp_trunc", "q55_greatest_least", "q56_hash_funcs",
-        "q57_array_funcs", "q58_json", "q60_exact_dedup",
-        "q61_fingerprint_dedup", "q64_ngram_jaccard", "q65_token_stats",
-        "q66_quality_score", "q67_lang_id", "q68_pii_scrub",
-        "q69_quality_filter", "q70_cosine_topk", "q74_ppjoin_jaccard",
-        "q78_intersect_all", "q79_correlated_exists_ineq",
-        "q80_tumbling_window", "q81_session_window", "q82_sliding_window",
-        "q90_multimodal_features", "q91_doc_chunking", "q92_pandas_udf_norm",
-        "q93_bpe_token_stats", "q94_vocabulary",
-    }
-)
-
-
-# Names the round-12 driver hash-verified green (CORRECTNESS_r12.json:
-# all 50 sampled rows — first greens for q188–q190, the decontam triad
-# re-led after its r12 NULL-contract change, and the stalest r9/r10
-# bands re-certified).
-DRIVER_VERIFIED_R12 = frozenset(
-    {
-        "q01_projection", "q02_filter", "q03_between_like", "q04_case_when",
-        "q05_cast_coalesce", "q06_distinct", "q103_more_strings",
-        "q106_keep_latest", "q107_stratified_sample", "q108_train_split",
-        "q109_contamination_check", "q10_inner_join",
-        "q110_repetition_ratio", "q111_length_histogram",
-        "q112_shuffle_order", "q11_left_join", "q120_tpch_q7",
-        "q121_tpch_q8", "q122_tpch_q10", "q123_late_shipments",
-        "q124_tpch_q14", "q152_sessionization", "q154_normalized_dedup",
-        "q155_tfidf_top_terms", "q156_session_funnel",
-        "q169_range_frame_probe", "q171_epoch_us_probe",
-        "q180_benchmark_decontam", "q185_decontam_rewrite",
-        "q186_decontam_accounting", "q188_decontam_bench_report",
-        "q189_shard_manifest", "q190_source_mixture_plan",
-        "q35_range_frame", "q36_first_last_nth", "q37_posexplode",
-        "q39_asof_join", "q49_string_position", "q59_ts_arith", "q75_pivot",
-        "q76_values_inline", "q77_except_all", "q86_range_join",
-        "q87_hypertable_rollup", "q88_count_min_sketch",
-        "q89_grouped_zscore", "q95_sentence_udtf", "q97_random_projection",
-        "q98_corr_covar", "q99_bit_aggs",
-    }
-)
-
-
-# name -> the LATEST round whose driver run hash-certified it (the
-# freshness rank the r9 rotation sorts on; later rounds overwrite).
-_FRESHEST_ROUND: dict[str, int] = {}
-for _round, _certified in (
-    (1, DRIVER_VERIFIED_R1),
-    (2, DRIVER_VERIFIED_R2),
-    (3, DRIVER_VERIFIED_R3),
-    (4, DRIVER_VERIFIED_R4),
-    (5, DRIVER_VERIFIED_R5),
-    (6, DRIVER_VERIFIED_R6),
-    (7, DRIVER_VERIFIED_R7),
-    (8, DRIVER_VERIFIED_R8),
-    (9, DRIVER_VERIFIED_R9),
-    (10, DRIVER_VERIFIED_R10),
-    (11, DRIVER_VERIFIED_R11),
-    (12, DRIVER_VERIFIED_R12),
-):
-    for _n in _certified:
-        _FRESHEST_ROUND[_n] = _round
+    return sorted(names, key=rank)
 
 
 def _reorder() -> None:
-    ranked = sorted(QUERIES, key=_priority)
+    ranked = registry_order(_DECLARED, ORACLE, driver_rounds())
     reordered_q = {n: QUERIES[n] for n in ranked}
     reordered_o = {n: ORACLE[n] for n in ranked if n in ORACLE}
     QUERIES.clear()
@@ -506,23 +138,7 @@ __all__ = [
     "ORACLE",
     "EAGER_QUERIES",
     "declared",
-    "DRIVER_VERIFIED_R1",
-    "DRIVER_VERIFIED_R2",
-    "DRIVER_VERIFIED_R3",
-    "DRIVER_VERIFIED_R4",
-    "DRIVER_VERIFIED_R5",
-    "DRIVER_VERIFIED_R6",
-    "DRIVER_VERIFIED_R7",
-    "DRIVER_VERIFIED_R8",
-    "DRIVER_VERIFIED_R9",
-    "DRIVER_VERIFIED_R10",
-    "DRIVER_VERIFIED_R11",
-    "DRIVER_VERIFIED_R12",
-    "HEAD_R6",
-    "DEFER_R6",
-    "HEAD_R7",
-    "HEAD_R8",
-    "DEFER_R8",
-    "HEAD_R9",
-    "HEAD_CURRENT",
+    "driver_rounds",
+    "last_green",
+    "registry_order",
 ]

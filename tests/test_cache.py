@@ -180,22 +180,6 @@ def test_bloom_index_fp_rate(spark):
     assert idx.definitely_absent("nope-definitely-not-there")
 
 
-# -- memory budget (C4) -----------------------------------------------------
-
-
-def test_memory_budget_accounting():
-    from iceberg_cache_spark.cache.memory import MemoryBudget, host_memory_budget
-
-    assert host_memory_budget(0.8) > 0
-    b = MemoryBudget(budget_bytes=1000)
-    assert b.allocate(600) and b.allocate(400)
-    assert not b.allocate(1)  # over budget -> refused, nothing reserved
-    b.deallocate(500)
-    assert b.allocate(400)
-    u = b.get_memory_usage()
-    assert u["used_bytes"] == 900 and u["available_bytes"] == 100
-
-
 def test_concurrent_get_or_load_loads_once(spark):
     import threading as _threading
 

@@ -8,7 +8,7 @@ import os
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from iceberg_cache_spark.sources.testdata import load_table
@@ -617,6 +617,8 @@ def random_corpus(draw):
 
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=random_corpus())
+# a corpus with no tokens at all packs nothing: every tier must be empty
+@example(rows=[(0, ""), (1, None), (2, "")])
 def test_packing_invariants(spark, tmp_path_factory, rows):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -673,7 +675,7 @@ def test_packing_invariants(spark, tmp_path_factory, rows):
     by_pack: dict = {}
     for m in man:
         by_pack.setdefault(m.pack_id, []).append(m)
-    last = max(by_pack)
+    last = max(by_pack, default=-1)
     assert set(by_pack) == set(range(last + 1))  # no empty packs
     for p, slices in by_pack.items():
         slices.sort(key=lambda m: m.pos_in_pack)

@@ -2,8 +2,9 @@
 
 1. q96 emits only scalar columns (driver's pandas canonicalizer can
    sort them — the one red CORRECTNESS_r02 row).
-2. Registry rotation: never-driver-checked queries first, then
-   rows-only, then certified queries oldest-evidence-first.
+2. Registry rotation, derived from the committed driver files: red
+   rows first, then never-certified queries, then certified queries
+   oldest-evidence-first, rows-only last.
 3. grouped_zscore defaults to the relational aggregate (no grouped
    pandas in the plan) and stays bit-identical to the pandas path.
 4. CacheManager refreshes the admission estimate to the ACTUAL
@@ -50,20 +51,33 @@ def test_q96_emits_only_scalar_columns(spark, sf_dir):
 # -- 2. registry rotation ------------------------------------------------
 
 
+# sha256 of "\n".join(order) for the registry order the hand-kept
+# per-round sets produced before the order was derived from the
+# committed driver files (r01–r12, with q190 led by hand in r13).
+_HAND_KEPT_ORDER_SHA256 = (
+    "ab25224f933f7fc4659e67fd5fe975fd1e50902f99e6a2045e62a5d40e7e6807"
+)
+
+
 def test_registry_orders_stalest_evidence_first():
-    """Round-10 protocol: HEAD_CURRENT leads (EMPTY this round — the
-    r9 driver certified every HEAD_R9 row, so no red rows carry a
-    fix), then oracle-matched names with no driver row yet, then
-    every other oracle-matched name sorted stalest driver evidence
-    FIRST (freshest certifying round ascending), and rows-only names
-    dead LAST (all carry their `no_oracle` rows; they spend no driver
-    slots)."""
+    """The live order, ranked from the committed driver files: names
+    the newest round left red lead, then oracle-matched names with no
+    green row yet, then every other oracle-matched name sorted stalest
+    driver evidence FIRST (newest certifying round ascending), and
+    rows-only names dead LAST (all carry their `no_oracle` rows; they
+    spend no driver slots)."""
     import iceberg_cache_spark.plans as P
-    from iceberg_cache_spark.plans import HEAD_CURRENT, ORACLE, QUERIES
+    from iceberg_cache_spark.plans import ORACLE, QUERIES
 
     names = list(QUERIES)
-    freshest = P._FRESHEST_ROUND
-    head = list(HEAD_CURRENT)
+    rounds = P.driver_rounds()
+    freshest = P.last_green(rounds)
+    newest = rounds[-1]
+    head = [
+        n
+        for n in names
+        if n in ORACLE and n in newest and not newest[n].get("hash_match")
+    ]
     new_unverified = [
         n
         for n in names
@@ -97,6 +111,62 @@ def test_registry_orders_stalest_evidence_first():
     # the must-certify tiers (head + first-row names) never overflow
     # the window; the rotation tier self-truncates by construction
     assert len(head) + len(new_unverified) <= 50
+    # the window never re-samples what the newest round just certified
+    assert not set(names[:50]) & (set(newest) - set(head))
+
+
+def test_registry_order_reproduces_the_hand_kept_order():
+    """Fed only r01–r12 plus r13's one hand decision (q190 led because
+    its expression changed, i.e. treated as not yet green), the
+    derivation equals the order the hand-kept sets produced."""
+    import hashlib
+
+    import iceberg_cache_spark.plans as P
+
+    rounds = P.driver_rounds()[:12] + [
+        {"q190_source_mixture_plan": {"hash_match": False}}
+    ]
+    order = P.registry_order(P._DECLARED, P.ORACLE, rounds)
+    digest = hashlib.sha256("\n".join(order).encode()).hexdigest()
+    assert len(order) == 194
+    assert digest == _HAND_KEPT_ORDER_SHA256
+
+
+def test_registry_order_follows_a_new_driver_file(tmp_path):
+    """Committing a CORRECTNESS_r{NN}.json re-ranks with no code edit:
+    its green names move to the back of the rotation tier and its red
+    oracle names lead. Local verification files never count."""
+    import json
+    import shutil
+
+    import iceberg_cache_spark.plans as P
+
+    for f in P._REPO_ROOT.glob("CORRECTNESS_r[0-9][0-9].json"):
+        shutil.copy(f, tmp_path / f.name)
+    live = P.registry_order(P._DECLARED, P.ORACLE, P.driver_rounds(tmp_path))
+    assert live == list(P.QUERIES)
+
+    green, red = live[:3], live[10]
+    rows = {n: {"hash_match": True} for n in green}
+    rows[red] = {"rows_match": True, "hash_match": False}
+    (tmp_path / "CORRECTNESS_r15.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_local_r15.json").write_text(
+        json.dumps({n: {"hash_match": False} for n in live[:20]})
+    )
+    order = P.registry_order(P._DECLARED, P.ORACLE, P.driver_rounds(tmp_path))
+    rest = [n for n in live if n in P.ORACLE and n not in green and n != red]
+    rows_only = [n for n in live if n not in P.ORACLE]
+    assert order == [red] + rest + green + rows_only
+
+
+def test_registry_order_without_driver_files_is_declaration_order(tmp_path):
+    import iceberg_cache_spark.plans as P
+
+    order = P.registry_order(P._DECLARED, P.ORACLE, P.driver_rounds(tmp_path))
+    assert order == (
+        [n for n in P._DECLARED if n in P.ORACLE]
+        + [n for n in P._DECLARED if n not in P.ORACLE]
+    )
 
 
 # -- 3. grouped z-score: relational default ------------------------------
