@@ -13,8 +13,11 @@ heap), and the driver keeps only bookkeeping. Capabilities:
 - pluggable eviction policies                        (C3)
 - TTL maintenance sweep that is genuinely scheduled  (C6 — the
   reference defined the sweep thread but never started it)
-- get_or_load read-through path                      (C8)
-- table invalidation                                 (C9)
+- get_or_load read-through path, with column
+  subsumption folded into the one lookup             (C8)
+- table invalidation by the tables each entry read   (C9 — the
+  reference matched the key's ``table#`` prefix; here every entry
+  records its tables at ``put``, defaulting to that same prefix)
 - stats                                              (C10)
 
 Sizing: Spark has no exact analogue of ``pa.Table.nbytes``; the plan's
@@ -49,6 +52,7 @@ class CacheEntry:
     last_accessed: float = field(default_factory=time.time)
     access_count: int = 0
     key: object = None  # original CacheKey when provided (for subsumption)
+    tables: frozenset[str] = frozenset()  # what invalidate_table matches
 
     def touch(self) -> None:
         self.last_accessed = time.time()
@@ -92,17 +96,37 @@ class CacheManager:
 
     # -- core ops ----------------------------------------------------------
 
-    def _get_nocount(self, key: CacheKey | str) -> DataFrame | None:
-        """Probe without touching hit/miss counters (internal re-checks)."""
+    def _lookup(self, key: CacheKey | str) -> DataFrame | None:
+        """The one probe, uncounted: the exact entry, or — for a
+        ``CacheKey`` that names columns — an entry for the same table /
+        snapshot / partition filter whose column set covers them (a
+        full-column entry covers any). A narrower projection is then
+        served from cached blocks without a reload, the improvement the
+        reference's keying scheme left on the table (SURVEY.md §4.1
+        'predicate-aware cache keying'). A column-less key matches only
+        its exact entry."""
         with self._lock:
             entry = self._entries.get(str(key))
+            if entry is None and isinstance(key, CacheKey) and key.columns:
+                entry = next(
+                    (
+                        e
+                        for e in self._entries.values()
+                        if isinstance(e.key, CacheKey)
+                        and e.key.table_id == key.table_id
+                        and e.key.snapshot_id == key.snapshot_id
+                        and e.key.partition_filter == key.partition_filter
+                        and (not e.key.columns or set(key.columns) <= set(e.key.columns))
+                    ),
+                    None,
+                )
             if entry is None:
                 return None
             entry.touch()
             return entry.df
 
     def get(self, key: CacheKey | str) -> DataFrame | None:
-        df = self._get_nocount(key)
+        df = self._lookup(key)
         with self._lock:
             if df is None:
                 self._misses += 1
@@ -110,9 +134,21 @@ class CacheManager:
                 self._hits += 1
         return df
 
-    def put(self, key: CacheKey | str, df: DataFrame, size_bytes: int | None = None) -> DataFrame:
-        """Admit a DataFrame: evict-until-fits, persist, bookkeep."""
+    def put(
+        self,
+        key: CacheKey | str,
+        df: DataFrame,
+        size_bytes: int | None = None,
+        tables: frozenset[str] | set[str] | None = None,
+    ) -> DataFrame:
+        """Admit a DataFrame: evict-until-fits, persist, bookkeep.
+
+        ``tables`` are the tables the entry was read from, the ones whose
+        invalidation drops it. By default that is the key's table: its
+        ``table_id``, or a string key's first ``#`` segment."""
         size = size_bytes if size_bytes is not None else self.estimate_size(df)
+        if tables is None:
+            tables = {key.table_id if isinstance(key, CacheKey) else key.split("#", 1)[0]}
         with self._lock:
             # Replacing an existing entry: unpersist the old DataFrame's
             # blocks first, and stop double-counting its bytes in the
@@ -121,31 +157,12 @@ class CacheManager:
             self._evict_until_fits(size)
             df = df.persist(self.storage_level)
             self._entries[str(key)] = CacheEntry(
-                df=df, size_bytes=size, key=key if isinstance(key, CacheKey) else None
+                df=df,
+                size_bytes=size,
+                key=key if isinstance(key, CacheKey) else None,
+                tables=frozenset(tables),
             )
         return df
-
-    def find_subsuming(self, key: CacheKey) -> DataFrame | None:
-        """Column-subsumption reuse: an entry for the same table /
-        snapshot / partition filter whose column set is a superset (or a
-        full-column entry) can serve a narrower projection without a
-        reload — the improvement the reference's keying scheme left on
-        the table (SURVEY.md §4.1 'predicate-aware cache keying')."""
-        with self._lock:
-            for entry in self._entries.values():
-                ck = entry.key
-                if not isinstance(ck, CacheKey):
-                    continue
-                if (
-                    ck.table_id == key.table_id
-                    and ck.snapshot_id == key.snapshot_id
-                    and ck.partition_filter == key.partition_filter
-                    and (not ck.columns or set(key.columns) <= set(ck.columns))
-                ):
-                    entry.touch()
-                    self._hits += 1
-                    return entry.df
-            return None
 
     def get_or_load(
         self,
@@ -169,18 +186,27 @@ class CacheManager:
         loader: Callable[[], DataFrame],
         materialize: bool = True,
     ) -> DataFrame:
-        """Load-under-lock half of get_or_load (probe already counted)."""
+        """Load-under-lock half of get_or_load (probe already counted).
+        The per-key lock is forgotten once its load ends, so snapshot
+        keys do not leave one lock each behind; a caller already waiting
+        on it still re-checks the cache before loading."""
+        name = str(key)
         with self._lock:
-            lock = self._loading.setdefault(str(key), threading.Lock())
-        with lock:
-            cached = self._get_nocount(key)
-            if cached is not None:
-                return cached
-            df = self.put(key, loader())
-            if materialize:
-                df.count()  # force the persisted blocks to fill
-                self._refresh_size(key, df)
-            return df
+            lock = self._loading.setdefault(name, threading.Lock())
+        try:
+            with lock:
+                cached = self._lookup(key)
+                if cached is not None:
+                    return cached
+                df = self.put(key, loader())
+                if materialize:
+                    df.count()  # force the persisted blocks to fill
+                    self._refresh_size(key, df)
+                return df
+        finally:
+            with self._lock:
+                if self._loading.get(name) is lock:
+                    del self._loading[name]
 
     def _refresh_size(self, key: CacheKey | str, df: DataFrame) -> None:
         """Replace the admission estimate with the materialized size.
@@ -222,20 +248,10 @@ class CacheManager:
             except Exception:
                 pass
 
-    def drop_keys(self, keys) -> int:
-        """Drop exactly the named entries (engine-side participation
-        tracking decides WHICH plan-cache entries a table commit
-        touches; the manager just evicts them)."""
-        with self._lock:
-            victims = [k for k in keys if k in self._entries]
-            for k in victims:
-                self._drop(k)
-            return len(victims)
-
     def invalidate_table(self, table_id: str) -> int:
-        """Drop every entry whose key starts with ``table_id#`` (C9)."""
+        """Drop every entry that read ``table_id`` (C9)."""
         with self._lock:
-            victims = [k for k in self._entries if k.split("#", 1)[0] == table_id]
+            victims = [k for k, e in self._entries.items() if table_id in e.tables]
             for k in victims:
                 self._drop(k)
             return len(victims)

@@ -9,6 +9,12 @@ Unlike the reference — whose engine and cache node were never actually
 wired (``get_all_tables`` exists only in its test double, ref
 ``src/tests/test_sql_query_engine.py:5-10``) — registration here is
 driven by the live cache manager state.
+
+Dependencies live on the cache entries: every entry records the tables
+it read (a table entry its own table, a cached SQL result the tables
+its analyzed plan reads), so ``invalidate_table`` is one call into the
+manager. A bloom index remembers the DataFrame it was built over and is
+consulted only while that DataFrame is still the table's cached one.
 """
 
 from __future__ import annotations
@@ -35,14 +41,11 @@ class CachedQueryEngine:
         # each view once instead of per call, re-registering only when
         # the table's snapshot moved or it was invalidated.
         self._registered: dict[str, str | None] = {}
-        # __plan#key -> tables the cached plan read (None = unknown ->
-        # drop on ANY invalidation). Lets invalidate_table keep cached
-        # SQL results that never touched the invalidated table.
-        self._plan_participants: dict[str, frozenset[str] | None] = {}
         # table_id -> snapshot-aware catalog (register_catalog_table)
         self._catalogs: dict[str, object] = {}
-        # (table_id, column) -> EntryBloomIndex (attach_bloom)
-        self._blooms: dict[tuple[str, str], object] = {}
+        # (table_id, column) -> (DataFrame the bloom summarizes,
+        # EntryBloomIndex) (attach_bloom)
+        self._blooms: dict[tuple[str, str], tuple[DataFrame, object]] = {}
         ensure_session_defaults(spark)
 
     # -- table registration -------------------------------------------------
@@ -111,14 +114,10 @@ class CachedQueryEngine:
         key = CacheKey.of(
             table_id, partition_filter, columns, snapshot_id=self._snapshot_of(table_id)
         )
-        cached = self.cache.get(key)
-        if cached is not None:
-            return cached
-        if columns:
-            superset = self.cache.find_subsuming(key)
-            if superset is not None:
-                return superset.select(*columns)  # projection of cached blocks
-        return self.cache.load_and_put(key, load, materialize=materialize)
+        df = self.cache.get_or_load(key, load, materialize=materialize)
+        # The entry may be another caller's column order or a covering
+        # superset: project to exactly what this caller asked for.
+        return df.select(*columns) if columns else df
 
     # -- SQL entry point ----------------------------------------------------
 
@@ -136,12 +135,12 @@ class CachedQueryEngine:
         df = self.spark.sql(query)
         if not cache_result:
             return df
-        key = f"__plan#{self._plan_fingerprint(df)}"
+        tables = self._plan_tables(df)
+        key = f"__plan#{self._plan_fingerprint(df, tables)}"
         cached = self.cache.get(key)
         if cached is not None:
             return cached
-        self._plan_participants[key] = self._plan_tables(df)
-        return self.cache.put(key, df)
+        return self.cache.put(key, df, tables=tables)
 
     def _ensure_views(self) -> None:
         """Register each known table as a temp view exactly once; a view
@@ -156,14 +155,14 @@ class CachedQueryEngine:
             self.table(table_id, materialize=False).createOrReplaceTempView(table_id)
             self._registered[table_id] = snap
 
-    def _plan_tables(self, df: DataFrame) -> frozenset[str] | None:
+    def _plan_tables(self, df: DataFrame) -> frozenset[str]:
         """Registered tables the analyzed plan actually reads: every
         temp view resolves to ``SubqueryAlias <name>`` in the analyzed
         plan, so walking node names and matching against the loader
-        registry names the participants. Returns ``None`` (= unknown,
-        treat as touching everything) on any reflection failure —
-        correctness degrades to the old drop-all behavior, never to a
-        stale hit."""
+        registry names the participants. On any reflection failure it
+        returns every registered table — the result then drops on any
+        invalidation and its fingerprint folds in every snapshot, so
+        correctness degrades to re-running, never to a stale hit."""
         known = set(self._loaders)
         try:
             found: set[str] = set()
@@ -182,32 +181,21 @@ class CachedQueryEngine:
                     stack.append(inner.apply(i))
             return frozenset(found)
         except Exception:
-            return None
+            return frozenset(known)
 
-    def _plan_fingerprint(self, df: DataFrame) -> str:
+    def _plan_fingerprint(self, df: DataFrame, tables: frozenset[str]) -> str:
         """Semantic hash of the canonicalized analyzed plan (attribute
         ids normalized away; no public PySpark API — JVM access), salted
-        with the snapshot ids of the catalog-backed tables the plan
-        actually READS (``_plan_tables``). A commit to a participant
-        changes the fingerprint and the cached result is a natural miss
-        — the stale entry ages out via eviction/TTL (and
-        invalidate_table eagerly drops the ``__plan#`` entries whose
-        plan read the invalidated table); a commit to an UNRELATED
-        catalog table leaves the fingerprint intact, so the cached
-        result keeps serving. If the participant walk fails, ALL
-        catalog snapshots fold in — unrelated commits then cost one
-        re-run, never a stale hit."""
+        with the snapshot ids of the catalog-backed ``tables`` the plan
+        reads (``_plan_tables``). A commit to a participant changes the
+        fingerprint and the cached result is a natural miss — the stale
+        entry ages out via eviction/TTL, and invalidate_table drops it
+        eagerly since the entry records the tables it read; a commit to
+        an UNRELATED catalog table leaves the fingerprint intact, so the
+        cached result keeps serving."""
         plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
         base = str(plan.canonicalized().semanticHash())
-        catalogs = self._catalogs
-        if not catalogs:
-            return base
-        participants = self._plan_tables(df)
-        salted = (
-            sorted(catalogs)
-            if participants is None
-            else sorted(t for t in catalogs if t in participants)
-        )
+        salted = sorted(t for t in self._catalogs if t in tables)
         if not salted:
             return base
         snaps = ",".join(f"{t}={self._snapshot_of(t)}" for t in salted)
@@ -220,17 +208,22 @@ class CachedQueryEngine:
         by point_lookup to prove absence without running a Spark job."""
         from iceberg_cache_spark.cache.bloom import EntryBloomIndex
 
-        self._blooms[(table_id, column)] = EntryBloomIndex(
-            self.table(table_id), column, **bloom_kwargs
-        )
+        df = self.table(table_id)
+        self._blooms[(table_id, column)] = (df, EntryBloomIndex(df, column, **bloom_kwargs))
 
     def point_lookup(self, table_id: str, column: str, value) -> DataFrame:
         """Equality lookup. If a bloom index proves the value absent the
         cached *empty* projection returns immediately — no scan, no job;
-        otherwise a normal filtered read of the cached table."""
-        bloom = self._blooms.get((table_id, column))
+        otherwise a normal filtered read of the cached table.
+
+        A bloom summarizes the entry it was built over, so it is used
+        only while the table still reads as that same DataFrame. A
+        commit (a new snapshot key), an invalidation or an eviction
+        loads a new one, and the lookup scans until attach_bloom runs
+        again — never a stale claim of absence."""
         df = self.table(table_id)
-        if bloom is not None and bloom.definitely_absent(value):
+        built_over, bloom = self._blooms.get((table_id, column), (None, None))
+        if built_over is df and bloom.definitely_absent(value):
             return df.limit(0)
         return df.filter(df[column] == value)
 
@@ -238,33 +231,6 @@ class CachedQueryEngine:
 
     def invalidate_table(self, table_id: str) -> int:
         n = self.cache.invalidate_table(table_id)
-        # Bloom indexes summarize a specific snapshot's data: a commit can
-        # add keys the bloom has never seen, turning definitely_absent
-        # into a wrong (stale) answer. Drop them; attach_bloom rebuilds
-        # on demand from the fresh cached table.
-        for bkey in [k for k in self._blooms if k[0] == table_id]:
-            del self._blooms[bkey]
-        # Cached SQL results: drop exactly the __plan# entries whose
-        # analyzed plan read this table (participation tracked at put
-        # time via _plan_tables). Entries with unknown participation
-        # (walker failed) and untracked strays drop too — correctness
-        # over reuse; a result that only read OTHER tables survives.
-        tracked = self._plan_participants
-        victims = [
-            k for k, tabs in tracked.items() if tabs is None or table_id in tabs
-        ]
-        victims += [
-            k
-            for k in self.cache.keys()
-            if k.startswith("__plan#") and k not in tracked
-        ]
-        self.cache.drop_keys(victims)
-        for k in victims:
-            tracked.pop(k, None)
-        # bookkeeping GC: forget records whose entry was evicted anyway
-        live = set(self.cache.keys())
-        for k in [k for k in tracked if k not in live]:
-            tracked.pop(k, None)
         self._registered.pop(table_id, None)
         try:
             self.spark.catalog.refreshTable(table_id)

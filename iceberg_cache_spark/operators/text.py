@@ -52,13 +52,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col)).cast("bigint")
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Sub-word-ish token count via a BPE-flavoured regex split:
-    letter runs, digit runs, and single punctuation each count."""
-    pieces = F.split(col, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])")
-    return F.size(F.filter(pieces, lambda t: F.trim(t) != "")).cast("bigint")
-
-
 def char_count(col: Column) -> Column:
     return F.length(col).cast("bigint")
 

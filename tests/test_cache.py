@@ -131,6 +131,28 @@ def test_invalidate_table_by_prefix():
     assert len(m.keys()) == 1  # orders_archive survives (exact table match)
 
 
+def test_entry_tables_decide_invalidation():
+    """An entry drops when any table it recorded at put is invalidated,
+    and only then."""
+    m = CacheManager(capacity_bytes=10_000)
+    m.put("__plan#x", FakeDF(), 10, tables={"a", "b"})
+    assert m.invalidate_table("c") == 0
+    assert m.keys() == ["__plan#x"]
+    assert m.invalidate_table("b") == 1
+    assert m.keys() == []
+
+
+def test_lookup_serves_covering_entries_to_projections_only():
+    """A projection is served from an entry whose columns cover it and
+    counts as one hit; a column-less key matches only its exact entry."""
+    m = CacheManager(capacity_bytes=10_000)
+    full = m.put(CacheKey.of("t"), FakeDF(), 10)
+    m.put(CacheKey.of("u", None, ["a"]), FakeDF(), 10)
+    assert m.get(CacheKey.of("t", None, ["a"])) is full
+    assert m.get(CacheKey.of("u")) is None
+    assert (m.stats()["hits"], m.stats()["misses"]) == (1, 1)
+
+
 def test_ttl_sweep():
     m = CacheManager(capacity_bytes=1000, ttl_seconds=10)
     m.put("a", FakeDF(), 10)
@@ -203,3 +225,13 @@ def test_concurrent_get_or_load_loads_once(spark):
         t.join()
     assert len(calls) == 1  # per-key lock: single load despite 4 racers
     m.clear()
+
+
+def test_loading_locks_do_not_outlive_their_load():
+    """Each snapshot key loads once; its per-key lock must not stay
+    behind after the load."""
+    m = CacheManager(capacity_bytes=10**9)
+    for i in range(5):
+        m.get_or_load(f"t#{i}", FakeDF, materialize=False)
+    assert len(m.keys()) == 5
+    assert m._loading == {}

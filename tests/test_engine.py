@@ -60,9 +60,20 @@ def test_column_subsumption_reuse(spark, tmp_path, engine):
 
     engine.register_loader("t", loader)
     engine.table("t")  # full-column entry
+    before = engine.stats()
     narrow = engine.table("t", columns=["id", "a"])  # served from cache
+    after = engine.stats()
     assert len(calls) == 1
+    assert after["hits"] - before["hits"] == 1  # one hit, no miss on the way
+    assert after["misses"] == before["misses"]
     assert narrow.columns == ["id", "a"] and narrow.count() == 100
+    engine.cache.clear()
+
+
+def test_projected_read_keeps_the_callers_column_order(spark, engine):
+    engine.register_loader("c", lambda: spark.range(10).selectExpr("id", "id * 2 AS a"))
+    assert engine.table("c", columns=["id", "a"]).columns == ["id", "a"]
+    assert engine.table("c", columns=["a", "id"]).columns == ["a", "id"]
     engine.cache.clear()
 
 

@@ -1,8 +1,14 @@
-"""Repository hygiene: every script under tools/ is documented."""
+"""Repository hygiene: every script under tools/ is documented, and a
+plain run of a gate never rewrites a committed record."""
 
 from __future__ import annotations
 
+import fnmatch
+import importlib.util
+import subprocess
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -18,3 +24,21 @@ def test_every_tool_is_named_in_readme():
         f"{undocumented} are not named in README.md: document each tool "
         "that stays, and delete one-off scripts once their result is recorded"
     )
+
+
+@pytest.mark.parametrize(
+    "gate", ["verify_contract", "verify_nulls", "verify_empty", "verify_skew"]
+)
+def test_gate_record_without_round_is_uncommitted(gate, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    spec = importlib.util.spec_from_file_location(f"_gate_{gate}", ROOT / "tools" / f"{gate}.py")
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    out = Path(module.OUT).resolve()
+    assert out.parent == ROOT
+    ignored = (ROOT / ".gitignore").read_text().split()
+    assert any(fnmatch.fnmatch(out.name, pattern) for pattern in ignored)
+    tracked = subprocess.run(
+        ["git", "ls-files", "--", out.name], cwd=ROOT, capture_output=True, text=True
+    ).stdout
+    assert not tracked.strip()

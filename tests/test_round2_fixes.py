@@ -69,6 +69,26 @@ def test_bloom_invalidated_on_commit(spark, tmp_path):
     engine.cache.clear()
 
 
+def test_bloom_bypassed_after_unwatched_commit(spark, tmp_path):
+    """Without watch_catalog nothing invalidates on commit: the new
+    snapshot is a new cache entry, and a bloom built over the old one
+    must not claim absence for it."""
+    engine = CachedQueryEngine(spark, CacheManager(capacity_bytes=10**9))
+    catalog = SnapshotParquetCatalog(spark, str(tmp_path / "whu"))
+    catalog.write_snapshot("t", spark.range(0, 10).withColumnRenamed("id", "k"))
+    engine.register_catalog_table(catalog, "t")
+    engine.attach_bloom("t", "k", num_bits=1 << 14)
+    assert engine.point_lookup("t", "k", 500).count() == 0
+    catalog.write_snapshot(
+        "t", spark.range(0, 10).withColumnRenamed("id", "k").union(
+            spark.createDataFrame([(500,)], ["k"])
+        ),
+    )
+    assert engine.sql("SELECT count(*) AS n FROM t WHERE k = 500").collect()[0].n == 1
+    assert engine.point_lookup("t", "k", 500).count() == 1
+    engine.cache.clear()
+
+
 def test_put_replacement_unpersists_old_entry(spark):
     cache = CacheManager(capacity_bytes=10**9)
     df1 = spark.range(10)

@@ -258,8 +258,8 @@ def test_star_cc_still_correct_on_path_graph(spark):
 
 def test_plan_cache_survives_unrelated_invalidation(spark, sf_dir):
     """A commit to table A must keep a cached SQL result that only read
-    table B (participation tracked from the analyzed plan), and still
-    drop results that DID read A."""
+    table B (the entry records the tables its analyzed plan read), and
+    still drop results that DID read A."""
     import os
 
     from iceberg_cache_spark.cache import CacheManager
@@ -283,16 +283,16 @@ def test_plan_cache_survives_unrelated_invalidation(spark, sf_dir):
     engine.invalidate_table("pp_a")
     survivors = [k for k in engine.cache.keys() if k.startswith("__plan#")]
     assert len(survivors) == 1  # only-B result survived the A commit
-    assert engine._plan_participants[survivors[0]] == frozenset({"pp_b"})
+    assert engine.cache._entries[survivors[0]].tables == frozenset({"pp_b"})
 
     engine.invalidate_table("pp_b")
     assert not [k for k in engine.cache.keys() if k.startswith("__plan#")]
     engine.cache.clear()  # don't leak InMemoryRelations into later tests
 
 
-def test_plan_cache_untracked_entries_still_drop(spark, sf_dir):
-    """Strays (no participation record) and walker failures (None)
-    must fall back to drop-on-any-invalidation, never to a stale hit."""
+def test_plan_cache_untracked_entries_still_drop(spark, sf_dir, monkeypatch):
+    """A walker failure must fall back to drop-on-any-invalidation,
+    never to a stale hit: the entry records every registered table."""
     import os
 
     from iceberg_cache_spark.cache import CacheManager
@@ -300,16 +300,19 @@ def test_plan_cache_untracked_entries_still_drop(spark, sf_dir):
 
     engine = CachedQueryEngine(spark, CacheManager(capacity_bytes=10**9))
     engine.register_parquet("pp_c", os.path.join(sf_dir, "region.parquet"))
+    engine.register_parquet("pp_d", os.path.join(sf_dir, "nation.parquet"))
+
+    class Unwalkable:
+        @property
+        def _jdf(self):
+            raise RuntimeError("plan walk failed")
+
+    walk = engine._plan_tables
+    monkeypatch.setattr(engine, "_plan_tables", lambda df: walk(Unwalkable()))
     engine.sql("SELECT count(*) AS n FROM pp_c", cache_result=True)
     (key,) = [k for k in engine.cache.keys() if k.startswith("__plan#")]
-    engine._plan_participants.pop(key)  # simulate a stray
-    engine.invalidate_table("pp_c")
-    assert not [k for k in engine.cache.keys() if k.startswith("__plan#")]
-
-    engine.sql("SELECT count(*) AS n FROM pp_c", cache_result=True)
-    (key2,) = [k for k in engine.cache.keys() if k.startswith("__plan#")]
-    engine._plan_participants[key2] = None  # simulate walker failure
-    engine.invalidate_table("pp_c")
+    assert engine.cache._entries[key].tables == frozenset({"pp_c", "pp_d"})
+    engine.invalidate_table("pp_d")  # a table the plan never read
     assert not [k for k in engine.cache.keys() if k.startswith("__plan#")]
     engine.cache.clear()  # don't leak InMemoryRelations into later tests
 
@@ -356,16 +359,20 @@ def test_plan_fingerprint_salts_only_participants(spark, tmp_path):
     engine.register_catalog_table(cat, "fp_x")
     engine.register_catalog_table(cat, "fp_y")
 
+    def fingerprint(query):
+        df = engine.sql(query)
+        return engine._plan_fingerprint(df, engine._plan_tables(df))
+
     q = "SELECT count(*) AS n FROM fp_y"
-    fp_before = engine._plan_fingerprint(engine.sql(q))
+    fp_before = fingerprint(q)
     cat.write_snapshot("fp_x", spark.range(3).withColumnRenamed("id", "x"))
     engine._registered.clear()  # force view re-resolution
-    fp_after_unrelated = engine._plan_fingerprint(engine.sql(q))
+    fp_after_unrelated = fingerprint(q)
     assert fp_before == fp_after_unrelated
 
     cat.write_snapshot("fp_y", spark.range(3).withColumnRenamed("id", "y"))
     engine._registered.clear()
-    fp_after_participant = engine._plan_fingerprint(engine.sql(q))
+    fp_after_participant = fingerprint(q)
     assert fp_after_participant != fp_before
     engine.cache.clear()
 

@@ -19,11 +19,10 @@ import os
 import sys
 import time
 
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "12")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OUT = os.path.join(REPO, f"EMPTYCHECK_r{ROUND}.json")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools.verify_contract import REPO, gate_output  # noqa: E402
 
-sys.path.insert(0, REPO)
+OUT = gate_output("EMPTYCHECK")
 
 # name -> reason (operator-contract exclusions only)
 SKIP: dict[str, str] = {}

@@ -21,14 +21,13 @@ import os
 import sys
 import time
 
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "12")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools.verify_contract import REPO, gate_output  # noqa: E402
+
 NULL_SF = os.environ.get("SPARK_GRAFT_NULL_SF", "sf0.001")
 SF = os.path.join(REPO, ".nulldata", NULL_SF)
 _SUFFIX = "" if NULL_SF == "sf0.001" else f"_{NULL_SF}"
-OUT = os.path.join(REPO, f"NULLCHECK_r{ROUND}{_SUFFIX}.json")
-
-sys.path.insert(0, REPO)
+OUT = gate_output("NULLCHECK", _SUFFIX)
 
 # name -> reason. Only operator-contract exclusions belong here (the
 # operator documents a non-null input requirement the fixture violates

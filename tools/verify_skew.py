@@ -20,14 +20,13 @@ from __future__ import annotations
 import os
 import sys
 
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "12")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from tools.verify_contract import REPO, gate_output  # noqa: E402
+
 SKEW_SF = os.environ.get("SPARK_GRAFT_SKEW_SF", "sf0.001")
 SF = os.path.join(REPO, ".skewdata", SKEW_SF)
 _SUFFIX = "" if SKEW_SF == "sf0.001" else f"_{SKEW_SF}"
-OUT = os.path.join(REPO, f"SKEWCHECK_r{ROUND}{_SUFFIX}.json")
-
-sys.path.insert(0, REPO)
+OUT = gate_output("SKEWCHECK", _SUFFIX)
 
 SKIP: dict[str, str] = {}
 
