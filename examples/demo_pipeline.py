@@ -15,7 +15,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from iceberg_cache_spark.config import EngineConfig, build_engine
+from iceberg_cache_spark.cache import CacheManager, CompositeEvictionPolicy
+from iceberg_cache_spark.engine import CachedQueryEngine
 from iceberg_cache_spark.operators import dedup as D
 from iceberg_cache_spark.operators import text as X
 from iceberg_cache_spark.operators.udfs import chunk_documents
@@ -24,21 +25,17 @@ from iceberg_cache_spark.serving.flight import (
     query_sql,
     serve_background,
 )
+from iceberg_cache_spark.session import get_spark
 from iceberg_cache_spark.sources.catalog import write_partitioned
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    cfg = EngineConfig(
-        app_name="demo_pipeline",
-        max_cache_bytes=1 << 30,
-        eviction_policy="composite",
-        parquet_tables={
-            name: os.path.join(sf_dir, f"{name}.parquet")
-            for name in ("documents", "customer", "nation")
-        },
-    )
-    engine = build_engine(cfg)
+    cache = CacheManager(capacity_bytes=1 << 30, policy=CompositeEvictionPolicy())
+    cache.start_maintenance()
+    engine = CachedQueryEngine(get_spark(app_name="demo_pipeline"), cache)
+    for name in ("documents", "customer", "nation"):
+        engine.register_parquet(name, os.path.join(sf_dir, f"{name}.parquet"))
 
     # 1. SQL through the cached engine (view sweep -> Catalyst)
     top = engine.sql(
@@ -75,6 +72,8 @@ def main() -> None:
     )
     print("flight sql result:", result.to_pylist())
     srv.shutdown()
+    cache.stop_maintenance()
+    cache.clear()
 
 
 if __name__ == "__main__":

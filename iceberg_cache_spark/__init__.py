@@ -21,13 +21,10 @@ Design stance (Spark-first, 100 TB-ready):
 
 from iceberg_cache_spark.session import cluster_conf, get_spark
 from iceberg_cache_spark.engine import CachedQueryEngine
-from iceberg_cache_spark.config import EngineConfig, build_engine
 
 __all__ = [
     "get_spark",
     "cluster_conf",
     "CachedQueryEngine",
-    "EngineConfig",
-    "build_engine",
 ]
 __version__ = "0.1.0"

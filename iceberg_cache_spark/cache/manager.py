@@ -21,9 +21,11 @@ heap), and the driver keeps only bookkeeping. Capabilities:
 - stats                                              (C10)
 
 Sizing: Spark has no exact analogue of ``pa.Table.nbytes``; the plan's
-optimizer stats (``sizeInBytes``) are used as the admission estimate —
-documented imprecision, refreshed to actual storage size after
-materialization when available.
+optimizer stats (``sizeInBytes``) are used as the admission estimate,
+and a materialized entry is re-accounted at the cached plan's own
+estimate. Neither is the stored size: the five benchmark tables are
+charged 60.5 MB while Spark's storage info holds 23.0 MB for them
+(``perfbench/NOTES.md``, dashboard_hit).
 """
 
 from __future__ import annotations
@@ -66,22 +68,17 @@ class CacheManager:
         policy: EvictionPolicy | None = None,
         ttl_seconds: float = DEFAULT_TTL_SECONDS,
         sweep_seconds: float = DEFAULT_SWEEP_SECONDS,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        start_maintenance: bool = False,
     ) -> None:
         self.capacity_bytes = capacity_bytes
         self.policy = policy or LRUEvictionPolicy()
         self.ttl_seconds = ttl_seconds
         self.sweep_seconds = sweep_seconds
-        self.storage_level = storage_level
         self._entries: dict[str, CacheEntry] = {}
         self._loading: dict[str, threading.Lock] = {}
         self._lock = threading.RLock()
         self._hits = 0
         self._misses = 0
         self._sweeper: threading.Timer | None = None
-        if start_maintenance:
-            self.start_maintenance()
 
     # -- size estimation ---------------------------------------------------
 
@@ -155,7 +152,7 @@ class CacheManager:
             # evict-until-fits accounting below.
             self._drop(str(key))
             self._evict_until_fits(size)
-            df = df.persist(self.storage_level)
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
             self._entries[str(key)] = CacheEntry(
                 df=df,
                 size_bytes=size,
@@ -209,18 +206,20 @@ class CacheManager:
                     del self._loading[name]
 
     def _refresh_size(self, key: CacheKey | str, df: DataFrame) -> None:
-        """Replace the admission estimate with the materialized size.
+        """Replace the admission estimate with the cached plan's estimate.
 
         Once the persisted blocks are filled, the cached plan's
-        ``InMemoryRelation`` computes its stats from the storage
-        accumulators — ACTUAL cached bytes, not the pre-materialization
-        optimizer guess. The stats must be read through a FRESH Dataset
+        ``InMemoryRelation`` computes its stats from the batches it
+        built rather than the pre-materialization optimizer guess; that
+        is still an estimate, not the bytes Spark stores (see the module
+        docstring). The stats must be read through a FRESH Dataset
         over the same logical plan (``df.alias``): the original df's
         QueryExecution is a lazy val computed before persist, so its
         optimizedPlan never re-runs cache substitution. Eviction
         decisions at capacity hinge on these numbers, so the entry is
-        re-accounted and the budget re-enforced (the actual size can
-        exceed the estimate; measured 6.7x on a uuid-string fixture)."""
+        re-accounted and the budget re-enforced (the cached estimate can
+        exceed the admission one; measured 6.7x on a uuid-string
+        fixture)."""
         actual = self.estimate_size(df.alias("__cache_size_probe"))
         if actual <= 0:
             return

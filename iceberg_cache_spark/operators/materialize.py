@@ -57,9 +57,6 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-SPREAD_MIN_BYTES_CONF = "spark.iceberg_cache.spread.minBytesPerTask"
-
-
 def spread_scan(
     df: DataFrame, *key_cols: str, min_bytes_per_task: int = 256 << 10
 ) -> DataFrame:
@@ -95,11 +92,9 @@ def spread_scan(
     partial sums) spreading exactly as round 13 measured them winning,
     while light consumers pass a higher floor (gopher passes 64 MB —
     a plain tokenize earns an exchange only when a task owns a real
-    file split's worth of text). Overridable per session via
-    ``spark.iceberg_cache.spread.minBytesPerTask`` (takes precedence;
-    set 0 to restore unconditional spreading). When statistics are
-    unavailable the spread proceeds (conservative at scale: the no-op
-    guard still catches already-parallel scans).
+    file split's worth of text); 0 restores unconditional spreading.
+    When statistics are unavailable the spread proceeds (conservative
+    at scale: the no-op guard still catches already-parallel scans).
 
     ``df.rdd`` here only compiles the physical plan to read its
     partitioning (no job); use on scan-level frames. Streaming frames
@@ -107,17 +102,10 @@ def spread_scan(
     micro-batch partitioning is the planner's job)."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     parts = df.rdd.getNumPartitions()
     if parts >= n:
         return df
-    try:
-        conf_min = spark.conf.get(SPREAD_MIN_BYTES_CONF, None)
-        if conf_min is not None:
-            min_bytes_per_task = int(conf_min)
-    except Exception:
-        pass
     if min_bytes_per_task > 0:
         try:
             raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

@@ -241,7 +241,7 @@ def rolling_time_agg_auto(
     input plus a tiny aggregate. On a parquet scan that is negligible,
     but when ``events`` is a derived pipeline its full upstream lineage
     is recomputed (uncached) for the estimate: materialize or persist
-    derived inputs before calling an ``*_auto`` entry point, or call
+    derived inputs before calling it, or call
     :func:`choose_rolling_plan` yourself on the cheap base table and
     dispatch manually."""
     plan, _ = choose_rolling_plan(

@@ -27,11 +27,14 @@ property tests): same session numbering (1-based per key in
 times keep their declared contract — each NULL-time event is its own
 session, numbered after all timed sessions of its key.
 
-Two entry points: :func:`sessionize_chunked` returns per-SESSION
-aggregates (count, start, end) and pre-aggregates inside the local
-phase so per-event rows never leave it; :func:`sessionize_chunked_ids`
-returns the input rows with their global ``session_id`` attached, for
-downstream per-session operators (ordered funnels, session features).
+Two chunked entry points, each beside the single-window plan it
+reproduces (``sessionize_default``, ``session_funnel_default``, the
+bodies of q152 and q156): :func:`sessionize_chunked` returns
+per-SESSION aggregates (count, start, end) and pre-aggregates inside
+the local phase so per-event rows never leave it (q167);
+:func:`session_funnel_chunked` returns the per-session ordered funnel
+flags (q168). Callers pick the plan; ``operators/rolling.py``'s
+``choose_rolling_plan`` estimates the key skew that decides it.
 """
 
 from __future__ import annotations
@@ -167,42 +170,6 @@ def sessionize_chunked(
         F.lit(1).cast("bigint").alias("n_events"),
         F.lit(None).cast("long").alias("start_us"),
         F.lit(None).cast("long").alias("end_us"),
-    )
-    return timed.unionByName(nulls)
-
-
-def sessionize_chunked_ids(
-    events: DataFrame,
-    gap_us: int,
-    bucket_us: int,
-    part_col: str = "user_id",
-    id_col: str = "event_id",
-    us_col: str = "us",
-) -> DataFrame:
-    """The input rows (ALL columns preserved) with their global
-    ``session_id`` attached — same numbering as
-    :func:`sessionize_chunked`. For downstream per-session operators;
-    the join back to the merge table is on (key, bucket), so no task
-    ever holds more than one bucket of one key."""
-    if bucket_us <= 0:
-        raise ValueError(f"bucket_us={bucket_us} must be positive")
-    nn = events.filter(F.col(us_col).isNotNull())
-    loc, bmerge = _local_and_merge(
-        nn, gap_us, bucket_us, part_col, id_col, us_col
-    )
-    gsid = (F.col("_base") + F.col("_lsid") - F.col("_merged")).cast("bigint")
-    timed = (
-        _join_on_part(
-            loc, bmerge.select(part_col, "_b", "_merged", "_base"), part_col, extra="_b"
-        )
-        .withColumn("session_id", gsid)
-        .drop("_b", "_lsid", "_merged", "_base")
-    )
-    null_ids = _null_sessions(
-        events.select(part_col, id_col, us_col), bmerge, part_col, id_col, us_col
-    )
-    nulls = events.filter(F.col(us_col).isNull()).join(
-        null_ids.select(id_col, "session_id"), [id_col]
     )
     return timed.unionByName(nulls)
 
@@ -359,7 +326,7 @@ def session_funnel_chunked(
 
 
 # ---------------------------------------------------------------------------
-# default (single-window) plans + automatic plan selection (round 8)
+# default (single-window) plans
 # ---------------------------------------------------------------------------
 
 
@@ -370,8 +337,7 @@ def sessionize_default(
     id_col: str = "event_id",
     us_col: str = "us",
 ) -> DataFrame:
-    """The classic lag + running-sum sessionization (q152's plan,
-    extracted verbatim so the auto selector can delegate to it):
+    """The classic lag + running-sum sessionization (q152's plan):
     cheapest when keys are plentiful — one hash shuffle on the key,
     both windows and the final aggregate reuse the exchange. Same
     output contract as :func:`sessionize_chunked`: ``(part,
@@ -412,9 +378,8 @@ def session_funnel_default(
     type_col: str = "event_type",
     stages: tuple[str, str, str] = ("view", "click", "purchase"),
 ) -> DataFrame:
-    """The single-shuffle stacked-window ordered funnel (q156's plan,
-    extracted verbatim for the auto selector). Same output contract as
-    :func:`session_funnel_chunked`."""
+    """The single-shuffle stacked-window ordered funnel (q156's plan).
+    Same output contract as :func:`session_funnel_chunked`."""
     s1, s2, s3 = stages
     wu = W.partitionBy(part_col).orderBy(
         F.col(us_col).asc_nulls_last(), id_col
@@ -467,81 +432,3 @@ def session_funnel_default(
         F.max("_s3after").cast("int").alias("reached_purchase"),
     )
 
-
-def sessionize_auto(
-    events: DataFrame,
-    gap_us: int,
-    bucket_us: int,
-    part_col: str = "user_id",
-    id_col: str = "event_id",
-    us_col: str = "us",
-    hot_share_threshold: float = 0.3,
-    max_task_rows: int = 2_000_000,
-    sample_one_in: int = 16,
-) -> DataFrame:
-    """Skew-adaptive sessionization: the same deterministic key-skew
-    estimate as ``rolling_time_agg_auto`` (operators/rolling.py) picks
-    :func:`sessionize_default` on well-distributed keys and
-    :func:`sessionize_chunked` when one key would serialize the window
-    task. Output is bit-identical either way (property-tested), so
-    the estimator steers only cost. The estimate is an EAGER action at
-    construction time that recomputes a derived input's lineage
-    (ADVICE r8) — persist derived inputs first, or dispatch manually
-    via ``choose_rolling_plan``; see ``rolling_time_agg_auto``."""
-    from iceberg_cache_spark.operators.rolling import choose_rolling_plan
-
-    plan, _ = choose_rolling_plan(
-        events,
-        part_col=part_col,
-        id_col=id_col,
-        hot_share_threshold=hot_share_threshold,
-        max_task_rows=max_task_rows,
-        sample_one_in=sample_one_in,
-    )
-    if plan == "chunked":
-        return sessionize_chunked(
-            events, gap_us, bucket_us,
-            part_col=part_col, id_col=id_col, us_col=us_col,
-        )
-    return sessionize_default(
-        events, gap_us, part_col=part_col, id_col=id_col, us_col=us_col
-    )
-
-
-def session_funnel_auto(
-    events: DataFrame,
-    gap_us: int,
-    bucket_us: int,
-    part_col: str = "user_id",
-    id_col: str = "event_id",
-    us_col: str = "us",
-    type_col: str = "event_type",
-    stages: tuple[str, str, str] = ("view", "click", "purchase"),
-    hot_share_threshold: float = 0.3,
-    max_task_rows: int = 2_000_000,
-    sample_one_in: int = 16,
-) -> DataFrame:
-    """Skew-adaptive ordered funnel: same selector, same bit-identical
-    output contract on both branches. Same eager-estimate caveat as
-    ``sessionize_auto`` — persist derived inputs before calling."""
-    from iceberg_cache_spark.operators.rolling import choose_rolling_plan
-
-    plan, _ = choose_rolling_plan(
-        events,
-        part_col=part_col,
-        id_col=id_col,
-        hot_share_threshold=hot_share_threshold,
-        max_task_rows=max_task_rows,
-        sample_one_in=sample_one_in,
-    )
-    if plan == "chunked":
-        return session_funnel_chunked(
-            events, gap_us, bucket_us,
-            part_col=part_col, id_col=id_col, us_col=us_col,
-            type_col=type_col, stages=stages,
-        )
-    return session_funnel_default(
-        events, gap_us,
-        part_col=part_col, id_col=id_col, us_col=us_col,
-        type_col=type_col, stages=stages,
-    )

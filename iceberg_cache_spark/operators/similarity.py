@@ -75,10 +75,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_exact_dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _exact_dot(a, b) / (_norm(a) * _norm(b))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -108,9 +108,8 @@ def q152(spark: SparkSession, sf: str) -> DataFrame:
     (us IS NULL forces a boundary; NULLS LAST ordering is explicit on
     both sides — the engines' ASC NULL defaults differ, r7 NULL gate).
 
-    The plan body lives in ``operators/sessionize.py::sessionize_default``
-    (extracted r8 so ``sessionize_auto`` delegates to the identical
-    expressions)."""
+    The plan body lives in ``operators/sessionize.py::sessionize_default``,
+    beside the chunked plan q167 runs for the same result."""
     from iceberg_cache_spark.operators.sessionize import sessionize_default
 
     e = T(spark, sf, "events")
@@ -482,9 +481,8 @@ def q156(spark: SparkSession, sf: str) -> DataFrame:
     NULLS LAST ordering as q152).
 
     The plan body lives in
-    ``operators/sessionize.py::session_funnel_default`` (extracted r8
-    so ``session_funnel_auto`` delegates to the identical
-    expressions)."""
+    ``operators/sessionize.py::session_funnel_default``, beside the
+    chunked plan q168 runs for the same result."""
     from iceberg_cache_spark.operators.sessionize import session_funnel_default
 
     e = T(spark, sf, "events")

@@ -16,9 +16,10 @@ forms:
 
 Every read runs exactly one query plan: the resolved DataFrame's own.
 The schema is derived from the analysed plan (no job), and the rows
-come either from one parallel ``toArrow`` job (results small by
-estimate) or from the same plan's JVM-encoded Arrow batches, pulled
-partition by partition with bounded driver memory. Metadata calls
+come either from one parallel ``toArrow`` job (a trusted size estimate
+within the session's ``spark.driver.maxResultSize``) or from the same
+plan's JVM-encoded Arrow batches, pulled partition by partition with
+bounded driver memory. Metadata calls
 (``get_flight_info``, ``list_flights``) resolve table tickets without
 admitting them to the cache, so listing tables never evicts hot
 entries. Scale note: a 100 TB serving deployment fronts many sessions
@@ -116,12 +117,30 @@ def _estimate_trustworthy(df: DataFrame) -> bool:
         return False
 
 
+def _collect_bound(df: DataFrame) -> int:
+    """Largest trusted size estimate served by the single-job ``toArrow``
+    path: the session's ``spark.driver.maxResultSize`` (0, unlimited,
+    counts as Spark's 1g default), the bound Spark enforces on that
+    collect anyway. Read per call, so a session's setting always wins.
+
+    Larger or unestimable results stream partition by partition, one
+    job per partition in sequence, with driver memory bounded by two
+    partitions. Both paths run the same plan; on 3 local cores
+    streaming measured 0.97-0.98x the ``toArrow`` time for an 8k-row
+    filter and a 600k-row table and 1.3x for a 5-row aggregate (median
+    of 7), so the gap is the per-partition job sequence, which grows
+    with partition count on a cluster. Same estimate-driven physical
+    choice Spark itself makes for broadcast joins."""
+    conf = df.sparkSession.sparkContext._jsc.sc().conf()
+    return conf.getSizeAsBytes("spark.driver.maxResultSize", "1g") or 1 << 30
+
+
 def _materialized_batches(df: DataFrame, batch_size: int):
-    """Fast serve path for results estimated to fit comfortably in
-    driver memory: one parallel ``toArrow`` job (no per-partition
-    sequential jobs), then zero-copy re-chunking to the advertised
-    batch size. ~gRPC-framing overhead over plain ``toArrow`` — the
-    profile the reference serves from (an in-memory Arrow table, ref
+    """Fast serve path for results estimated within ``_collect_bound``:
+    one parallel ``toArrow`` job (no per-partition sequential jobs),
+    then zero-copy re-chunking to the advertised batch size.
+    ~gRPC-framing overhead over plain ``toArrow`` — the profile the
+    reference serves from (an in-memory Arrow table, ref
     ``src/flight_server/server.py:53``)."""
     yield from df.toArrow().to_batches(max_chunksize=batch_size)
 
@@ -178,26 +197,11 @@ class SparkFlightServer(flight.FlightServerBase):
         engine: CachedQueryEngine,
         location: str = "grpc://0.0.0.0:8815",
         batch_size: int = DEFAULT_BATCH_SIZE,
-        materialize_below_bytes: int = 1 << 30,
     ) -> None:
-        """``materialize_below_bytes``: results whose Catalyst size
-        estimate is under this use the single-job ``toArrow`` fast path
-        (driver memory = result size, all partitions computed in
-        parallel); larger or unestimable results stream
-        partition-by-partition, one job per partition in sequence, with
-        driver memory bounded by two partitions. Both paths run the same
-        plan; on 3 local cores streaming measured 0.97-0.98x the
-        ``toArrow`` time for an 8k-row filter and a 600k-row table and
-        1.3x for a 5-row aggregate (median of 7), so the gap is the
-        per-partition job sequence, which grows with partition count on
-        a cluster. Same estimate-driven physical choice Spark itself
-        makes for broadcast joins; set to 0 to force streaming for every
-        result."""
         super().__init__(location)
         self.engine = engine
         self.location = location
         self.batch_size = batch_size
-        self.materialize_below_bytes = materialize_below_bytes
 
     # -- resolution --------------------------------------------------------
 
@@ -221,10 +225,7 @@ class SparkFlightServer(flight.FlightServerBase):
         name = ticket.ticket.decode()
         df = self._resolve(name)
         schema = _df_schema(df)
-        if (
-            _estimated_bytes(df) <= self.materialize_below_bytes
-            and _estimate_trustworthy(df)
-        ):
+        if _estimated_bytes(df) <= _collect_bound(df) and _estimate_trustworthy(df):
             gen = _materialized_batches(df, self.batch_size)
         else:
             gen = _batches(df, self.batch_size)

@@ -74,8 +74,20 @@ class SnapshotParquetCatalog:
             return json.load(f)
 
     def _write_log(self, table_id: str, log: list[dict]) -> None:
-        with open(self._log_path(table_id), "w") as f:
-            json.dump(log, f, indent=1)
+        """Replace the log atomically: a temp file in the table directory
+        is renamed over it, so a failed write leaves the previous history
+        whole and a concurrent reader sees the old log or the new one,
+        never a truncated file."""
+        path = self._log_path(table_id)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(log, f, indent=1)
+            os.replace(tmp, path)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def write_snapshot(
         self, table_id: str, df: DataFrame, mode: str = "overwrite"
@@ -452,21 +464,21 @@ def expire_snapshots(
 ) -> int:
     """Drop all but the newest ``keep_last`` snapshots and delete data
     files no surviving snapshot references — the erasure half of
-    delete_where, and the storage-reclaim half of compaction."""
-    import os as _os
-
+    delete_where, and the storage-reclaim half of compaction. The new
+    log is written before any file goes, so no snapshot in the log
+    ever names a deleted file."""
     log = catalog._read_log(table_id)
     if len(log) <= keep_last:
         return 0
     keep, drop = log[-keep_last:], log[:-keep_last]
     kept_files = {f for s in keep for f in s["files"]}
+    catalog._write_log(table_id, keep)
     removed = 0
     for snap in drop:
         for f in snap["files"]:
-            if f not in kept_files and _os.path.exists(f):
-                _os.remove(f)
+            if f not in kept_files and os.path.exists(f):
+                os.remove(f)
                 removed += 1
-    catalog._write_log(table_id, keep)
     _notify_commit_listeners(catalog, table_id)
     return removed
 

@@ -135,6 +135,38 @@ def test_compact_and_expire(spark, catalog):
     assert catalog.read_table("c").count() == 80
 
 
+def test_interrupted_log_write_keeps_the_history(spark, catalog, monkeypatch):
+    """One ``_snapshots.json`` holds a table's whole history. A commit,
+    or an expiry, whose log write dies part-way must leave the previous
+    history readable and every file it names on disk."""
+    import json
+    import os
+
+    from iceberg_cache_spark.sources.catalog import expire_snapshots
+
+    s1 = catalog.write_snapshot("t", spark.range(0, 10))
+    s2 = catalog.write_snapshot("t", spark.range(0, 25))
+    dump = json.dump
+
+    def dies_midway(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:40])
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(json, "dump", dies_midway)
+    with pytest.raises(OSError):
+        catalog.write_snapshot("t", spark.range(0, 99))
+    with pytest.raises(OSError):
+        expire_snapshots(catalog, "t", keep_last=1)
+    monkeypatch.setattr(json, "dump", dump)
+
+    hist = catalog.snapshot_history("t")
+    assert [s.snapshot_id for s in hist] == [s2.snapshot_id, s1.snapshot_id]
+    assert catalog.read_table("t", snapshot_id=s1.snapshot_id).count() == 10
+    assert catalog.read_table("t").count() == 25
+    table_dir = os.path.join(catalog.root, "t")
+    assert not [f for f in os.listdir(table_dir) if f.endswith(".tmp")]
+
+
 def test_upsert_merge_semantics(spark, catalog):
     from iceberg_cache_spark.sources.catalog import upsert
 

@@ -77,27 +77,6 @@ def test_projected_read_keeps_the_callers_column_order(spark, engine):
     engine.cache.clear()
 
 
-def test_build_engine_from_config(spark, sf_dir):
-    import os as _os
-
-    from iceberg_cache_spark.config import EngineConfig, build_engine
-
-    cfg = EngineConfig(
-        app_name="cfg_test",
-        max_cache_bytes=64 << 20,
-        eviction_policy="composite",
-        start_maintenance=False,
-        parquet_tables={"region": _os.path.join(sf_dir, "region.parquet")},
-    )
-    eng = build_engine(cfg)
-    assert eng.sql("SELECT COUNT(*) AS n FROM region").collect()[0].n == 5
-    assert eng.stats()["capacity_bytes"] == 64 << 20
-    eng.cache.clear()
-
-    with pytest.raises(ValueError):
-        build_engine(EngineConfig(eviction_policy="nope"))
-
-
 def test_plan_fingerprint_result_cache(spark, sf_dir, engine):
     import os as _os
 

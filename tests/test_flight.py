@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import itertools
 import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -120,21 +123,24 @@ def test_do_get_throughput_within_2x_of_toarrow(spark):
         srv.shutdown()
 
 
-def test_do_get_streaming_path_parity_and_no_cliff(spark):
-    """Force the O(flush-window)-memory streaming path
-    (materialize_below_bytes=0) on the same 600k-row table: bytes served
+def test_do_get_streaming_path_parity_and_no_cliff(spark, monkeypatch):
+    """Force the O(flush-window)-memory streaming path (a collect
+    bound of 0) on the same 600k-row table: bytes served
     must be IDENTICAL to the fast path, and the cost must stay within a
     small constant of toArrow (the pack round trip + sequential
     per-partition jobs — ~3x on 3 partitions, never the old
     row-at-a-time ~10-100x cliff)."""
     import time
 
+    from iceberg_cache_spark.serving import flight as fl
+
     big_sf = "/root/testdata/sf0.1"
     if not os.path.exists(os.path.join(big_sf, "lineitem.parquet")):
         pytest.skip("sf0.1 fixtures absent")
     engine = CachedQueryEngine(spark)
     engine.register_parquet("lineitem_big", os.path.join(big_sf, "lineitem.parquet"))
-    srv = SparkFlightServer(engine, "grpc://127.0.0.1:0", materialize_below_bytes=0)
+    monkeypatch.setattr(fl, "_collect_bound", lambda df: 0)
+    srv = SparkFlightServer(engine, "grpc://127.0.0.1:0")
     location = f"grpc://127.0.0.1:{srv.port}"
     serve_background(srv)
     try:
@@ -249,11 +255,11 @@ def test_estimate_distrusts_outer_joins_and_streams(server, monkeypatch):
         fl.query_sql(location, "SELECT r_name FROM region")
 
 
-def test_sql_ticket_adaptive_parity_multi_partition(spark, sf_dir):
+def test_sql_ticket_adaptive_parity_multi_partition(spark, sf_dir, monkeypatch):
     """VERDICT r4 item 7: the ``sql:`` ticket path must ride the same
     adaptive chooser as table tickets and round-trip a >1-partition
     result identically on BOTH physical paths."""
-    from iceberg_cache_spark.serving.flight import query_sql
+    from iceberg_cache_spark.serving import flight as fl
 
     engine = CachedQueryEngine(spark)
     engine.register_parquet("lineitem_fp", os.path.join(sf_dir, "lineitem.parquet"))
@@ -265,9 +271,8 @@ def test_sql_ticket_adaptive_parity_multi_partition(spark, sf_dir):
         want = engine.sql(sql).toArrow()
         results = {}
         for label, thresh in (("materialized", 1 << 30), ("streaming", 0)):
-            srv = SparkFlightServer(
-                engine, "grpc://127.0.0.1:0", materialize_below_bytes=thresh
-            )
+            monkeypatch.setattr(fl, "_collect_bound", lambda df: thresh)
+            srv = SparkFlightServer(engine, "grpc://127.0.0.1:0")
             serve_background(srv)
             try:
                 got = query_sql(f"grpc://127.0.0.1:{srv.port}", sql)
@@ -409,3 +414,49 @@ def test_list_flights_leaves_the_cache_alone(spark):
     finally:
         srv.shutdown()
         engine.cache.clear()
+
+
+_MAX_RESULT_SIZE_PROBE = """
+from pyspark.sql import SparkSession
+from iceberg_cache_spark.engine import CachedQueryEngine
+from iceberg_cache_spark.serving import flight as fl
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.maxResultSize", "1m")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+engine = CachedQueryEngine(spark)
+sql = "SELECT id, id * 2 AS a, id * 3 AS b FROM range(0, 400000, 1, 40)"
+df = engine.sql(sql)
+assert df.rdd.getNumPartitions() == 40
+assert fl._estimate_trustworthy(df)
+assert (1 << 20) < fl._estimated_bytes(df) < (1 << 30), fl._estimated_bytes(df)
+srv = fl.SparkFlightServer(engine, "grpc://127.0.0.1:0")
+fl.serve_background(srv)
+try:
+    got = fl.query_sql(f"grpc://127.0.0.1:{srv.port}", sql)
+    assert got.num_rows == 400_000, got.num_rows
+    assert got.column("b").to_pylist()[-1] == 3 * 399_999
+finally:
+    srv.shutdown()
+print("SERVED", got.num_rows)
+"""
+
+
+def test_collect_bound_is_the_sessions_max_result_size():
+    """The single ``toArrow`` collect is bounded by
+    ``spark.driver.maxResultSize``, so a result estimated above it must
+    stream instead. A session of its own (the setting is fixed when the
+    driver starts) at 1m serves a trusted 40-partition result estimated
+    at several MB: every row arrives, where a fixed 1 GiB bound sent it
+    to ``toArrow`` and Spark aborted the collect."""
+    root = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(root), os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _MAX_RESULT_SIZE_PROBE],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0 and "SERVED 400000" in proc.stdout, proc.stderr[-3000:]

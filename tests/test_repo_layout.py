@@ -27,7 +27,11 @@ def test_every_tool_is_named_in_readme():
 
 
 @pytest.mark.parametrize(
-    "gate", ["verify_contract", "verify_nulls", "verify_empty", "verify_skew"]
+    "gate",
+    [
+        "verify_contract", "verify_nulls", "verify_empty", "verify_skew",
+        "bench_sf1", "audit_oracle_types",
+    ],
 )
 def test_gate_record_without_round_is_uncommitted(gate, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)

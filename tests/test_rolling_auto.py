@@ -90,53 +90,3 @@ def test_auto_output_identical_on_both_branches(spark, sf_dir, force):
     b = {tuple(r) for r in ref.collect()}
     assert a == b
 
-
-# --- sessionization / funnel autos (same selector, r8) -------------------
-
-
-def _sess_events(spark, sf_dir):
-    from iceberg_cache_spark.sources.testdata import load_table
-
-    e = load_table(spark, sf_dir, "events")
-    return e.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-
-
-GAP = 30 * 60 * 1_000_000
-BUCKET = 8 * GAP
-
-
-@pytest.mark.parametrize("force_chunked", [False, True])
-def test_sessionize_auto_identical_on_both_branches(spark, sf_dir, force_chunked):
-    from iceberg_cache_spark.operators.sessionize import (
-        sessionize_auto,
-        sessionize_default,
-    )
-
-    ev = _sess_events(spark, sf_dir).select("user_id", "event_id", "us")
-    kw = dict(max_task_rows=2) if force_chunked else {}
-    auto = sessionize_auto(ev, GAP, BUCKET, **kw)
-    ref = sessionize_default(ev, GAP)
-    assert {tuple(r) for r in auto.collect()} == {
-        tuple(r) for r in ref.collect()
-    }
-
-
-@pytest.mark.parametrize("force_chunked", [False, True])
-def test_funnel_auto_identical_on_both_branches(spark, sf_dir, force_chunked):
-    from iceberg_cache_spark.operators.sessionize import (
-        session_funnel_auto,
-        session_funnel_default,
-    )
-
-    ev = _sess_events(spark, sf_dir)
-    kw = dict(max_task_rows=2) if force_chunked else {}
-    auto = session_funnel_auto(ev, GAP, BUCKET, **kw)
-    ref = session_funnel_default(ev, GAP)
-    assert {tuple(r) for r in auto.collect()} == {
-        tuple(r) for r in ref.collect()
-    }

@@ -3,16 +3,13 @@
 spread_scan's byte gate (round 14): the spread must keep firing for
 sources big enough that per-task compute dominates, stay a no-op for
 tiny sources (the driver-measured q117 regression: 32-way fan-out
-jitter on sub-second single-task work), and respect the session conf
-override.
+jitter on sub-second single-task work), and spread unconditionally at
+a zero per-task floor.
 """
 
 from __future__ import annotations
 
-from iceberg_cache_spark.operators.materialize import (
-    SPREAD_MIN_BYTES_CONF,
-    spread_scan,
-)
+from iceberg_cache_spark.operators.materialize import spread_scan
 
 
 def _parts(df) -> int:
@@ -165,13 +162,3 @@ def test_gapfill_span_generation_matches_dense_grid_reference(spark):
     assert got_locf == ref_locf
     assert got_lerp == ref_lerp
 
-
-def test_spread_gate_conf_override_wins(spark):
-    big = spark.range(0, 10_000_000, 1, 1)
-    spark.conf.set(SPREAD_MIN_BYTES_CONF, str(1 << 40))
-    try:
-        assert _parts(spread_scan(big, "id")) == 1
-    finally:
-        spark.conf.unset(SPREAD_MIN_BYTES_CONF)
-    n = spark.sparkContext.defaultParallelism
-    assert _parts(spread_scan(big, "id")) == n

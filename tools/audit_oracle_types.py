@@ -20,7 +20,8 @@ hasher even when a fetchall hasher would call it equal:
   corpus trends toward exact-type oracles)
 
 Run: python tools/audit_oracle_types.py  [--sf /root/testdata/sf0.01]
-Exit code 1 iff any RED.
+Exit code 1 iff any RED. Writes TYPEAUDIT_local_r{N}.json with
+SPARK_GRAFT_ROUND=<N>, else the uncommitted TYPEAUDIT_local_rdev.json.
 """
 
 from __future__ import annotations
@@ -37,6 +38,9 @@ from tests.oracle import (  # noqa: E402
     classify_type_pair as classify,
     spark_type_key,
 )
+from tools.verify_contract import REPO, gate_output  # noqa: E402
+
+OUT = gate_output("TYPEAUDIT_local")
 
 
 def main() -> int:
@@ -59,8 +63,7 @@ def main() -> int:
 
     spec = importlib.util.spec_from_file_location(
         "__spark_entry__",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "__spark_entry__.py"),
+        os.path.join(REPO, "__spark_entry__.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -110,8 +113,7 @@ def main() -> int:
               f"duck={f['duck']} {f['err'] or ''}", flush=True)
     print(f"RESULT: {n_ok} aligned, {len(reds)} RED, {len(warns)} WARN",
           flush=True)
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "TYPEAUDIT_local.json"), "w") as fh:
+    with open(OUT, "w") as fh:
         json.dump({"aligned": n_ok, "red": len(reds), "warn": len(warns),
                    "findings": findings}, fh, indent=1)
     return 1 if reds else 0

@@ -4,7 +4,8 @@ Runs the q120–q144 TPC-H tier against the 10x-replicated sf1 corpus
 (tools/gen_sf1.py) under bench.py's OWN measurement protocol —
 calibration anchors first (recorded, drift_ratio None off-sf0.1 by
 bench.py's guard), then fresh child processes per contiguous slice,
-median-of-3 with the spread gate. Writes BENCH_sf1_r{N}.json.
+median-of-3 with the spread gate. Writes BENCH_sf1_r{N}.json with
+SPARK_GRAFT_ROUND=<N>, else the uncommitted BENCH_sf1_rdev.json.
 
 Reads to make of the artifact:
 - per-query sf0.1 -> sf1 ratio: 10x rows on the same 32 cores should
@@ -25,9 +26,9 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.gen_sf1 import ensure_sf1  # noqa: E402
+from tools.verify_contract import REPO, gate_output  # noqa: E402
 
-ROUND = os.environ.get("SPARK_GRAFT_ROUND", "10")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT = gate_output("BENCH_sf1")
 BENCH = os.path.join(REPO, "bench.py")
 
 
@@ -108,11 +109,10 @@ def main() -> int:
             "10x key-offset replication of /root/testdata/sf0.1"
         ),
     }
-    out_path = os.path.join(REPO, f"BENCH_sf1_r{ROUND}.json")
-    with open(out_path, "w") as fh:
+    with open(OUT, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
     print(json.dumps({"value": payload["value"], "n": len(times)}))
-    print(f"wrote {out_path}")
+    print(f"wrote {OUT}")
     return 0
 
 
