@@ -15,6 +15,17 @@ it read (a table entry its own table, a cached SQL result the tables
 its analyzed plan reads), so ``invalidate_table`` is one call into the
 manager. A bloom index remembers the DataFrame it was built over and is
 consulted only while that DataFrame is still the table's cached one.
+
+Layout: a table read whose size estimate is known and at most the
+session's ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (64 MB
+by default, read on every load) is stored as one partition
+(``coalesce(1)``). Its cached scan then reports ``SinglePartition``,
+which satisfies what an aggregate, a sort and a join of two such
+tables require, so none of them plans a shuffle: a GROUP BY ... ORDER
+BY over a resident table runs one job instead of four. Larger and
+unestimable reads keep the source's layout. The cost: a source of
+several files or row groups just under the bound is scanned in one
+task when it is loaded.
 """
 
 from __future__ import annotations
@@ -56,7 +67,13 @@ class CachedQueryEngine:
         self._loaders[table_id] = loader
 
     def register_parquet(self, table_id: str, path: str) -> None:
-        self.register_loader(table_id, lambda: self.spark.read.parquet(path))
+        """Read ``path`` as a table. Its schema is inferred once, here
+        (one Spark job), and every load reads with it and runs no job.
+        The files at ``path`` must therefore keep their schema; a table
+        whose schema evolves belongs in a catalog
+        (``register_catalog_table``)."""
+        schema = self.spark.read.parquet(path).schema
+        self.register_loader(table_id, lambda: self.spark.read.schema(schema).parquet(path))
 
     def register_catalog_table(self, catalog, table_id: str) -> None:
         """Bind a snapshot-aware catalog table (SnapshotParquetCatalog or
@@ -87,6 +104,12 @@ class CachedQueryEngine:
         except Exception:
             return None
 
+    def _one_partition_bytes(self) -> int:
+        """The session's ``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+        the size AQE already merges each shuffle partition up to."""
+        value = self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        return self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(value)
+
     def table(
         self,
         table_id: str,
@@ -107,6 +130,8 @@ class CachedQueryEngine:
                     df = df.filter(df[col] == val)
             if columns:
                 df = df.select(*columns)
+            if 0 < CacheManager.estimate_size(df) <= self._one_partition_bytes():
+                return df.coalesce(1)  # see "Layout" in the module docstring
             return df
 
         if not use_cache:

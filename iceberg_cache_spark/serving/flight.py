@@ -41,6 +41,10 @@ from pyspark.util import _local_iterator_from_socket
 from iceberg_cache_spark.engine import CachedQueryEngine
 
 DEFAULT_BATCH_SIZE = 10_000
+# Longest error text a failing reply stream sends. gRPC carries it in
+# the status metadata, and a client rejects metadata above its limit
+# (8 KB by default) without showing any of it.
+ERROR_TEXT_LIMIT = 1024
 
 
 def _df_schema(df: DataFrame) -> pa.Schema:
@@ -191,6 +195,34 @@ def _in_callers_context(df: DataFrame, gen):
     return resumed()
 
 
+def _error_line(e: BaseException) -> str:
+    """The first line of what went wrong, at most ``ERROR_TEXT_LIMIT``
+    characters. A JVM error raised through py4j (the streaming path)
+    starts with py4j's own "An error occurred while calling ..." line,
+    so its root cause is what names the failure."""
+    java = getattr(e, "java_exception", None)
+    if java is not None:
+        while java.getCause() is not None:
+            java = java.getCause()
+        text = java.toString()
+    else:
+        text = str(e)
+    lines = text.strip().splitlines()
+    return (lines[0] if lines else type(e).__name__)[:ERROR_TEXT_LIMIT]
+
+
+def _bounded_errors(gen):
+    """Re-raise a failure inside the reply stream as a
+    ``FlightServerError`` carrying one bounded line (``_error_line``),
+    chained from the original. Passed through whole, a Spark error's
+    stack trace overflows the client's gRPC metadata limit and the
+    client sees only "received initial metadata size exceeds limit"."""
+    try:
+        yield from gen
+    except Exception as e:
+        raise flight.FlightServerError(_error_line(e)) from e
+
+
 class SparkFlightServer(flight.FlightServerBase):
     def __init__(
         self,
@@ -229,7 +261,7 @@ class SparkFlightServer(flight.FlightServerBase):
             gen = _materialized_batches(df, self.batch_size)
         else:
             gen = _batches(df, self.batch_size)
-        return flight.GeneratorStream(schema, _in_callers_context(df, gen))
+        return flight.GeneratorStream(schema, _in_callers_context(df, _bounded_errors(gen)))
 
     def list_flights(self, context, criteria):  # noqa: D102
         for table_id in self.engine._loaders:

@@ -159,3 +159,71 @@ def test_sql_unknown_table_clean_error(spark, engine):
 def test_table_without_loader_raises_keyerror(engine):
     with pytest.raises(KeyError):
         engine.table("unregistered")
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"engine-test-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store caught up
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_parquet_load_runs_no_job(spark, sf_dir, engine):
+    """register_parquet infers the schema once; a load then builds its
+    DataFrame without the schema-inference job."""
+    engine.register_parquet("nation_schema", os.path.join(sf_dir, "nation.parquet"))
+    assert _jobs_run_by(spark, lambda: engine.table("nation_schema", use_cache=False)) == 0
+    assert engine.table("nation_schema", use_cache=False).count() == 25
+
+
+def test_small_entry_is_one_partition_unless_above_the_advisory_size(spark, engine):
+    """A table whose estimate fits the session's advisory partition size
+    is stored coalesced to one partition; with the advisory size set
+    below its estimate the entry keeps the source's partitions."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    engine.register_loader("ranged4", lambda: spark.range(0, 10_000, 1, 4))
+
+    def stored_plan():
+        return engine.table("ranged4")._jdf.queryExecution().executedPlan().toString()
+
+    small = engine.table("ranged4")
+    assert small.rdd.getNumPartitions() == 1
+    assert "Coalesce" in stored_plan()
+    engine.cache.clear()
+
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1k")  # below the 80 KB estimate
+    try:
+        large = engine.table("ranged4")
+        assert large.rdd.getNumPartitions() == 4
+        assert "Coalesce" not in stored_plan()
+    finally:
+        spark.conf.set(key, before)
+        engine.cache.clear()
+
+
+def test_one_partition_entry_answers_like_the_plain_scan(spark, sf_dir, engine):
+    """The same GROUP BY ... ORDER BY returns the same rows over the
+    engine's one-partition entry as over a plain parquet read, and the
+    entry's plan has no exchange."""
+    path = os.path.join(sf_dir, "customer.parquet")
+    engine.register_parquet("customer_layout", path)
+    agg = (
+        "SELECT c_nationkey, COUNT(*) AS n, SUM(c_acctbal) AS bal "
+        "FROM {} GROUP BY c_nationkey ORDER BY c_nationkey"
+    )
+    try:
+        got = engine.sql(agg.format("customer_layout"))
+        assert "Exchange" not in got._jdf.queryExecution().executedPlan().toString()
+        spark.read.parquet(path).createOrReplaceTempView("customer_plain")
+        want = spark.sql(agg.format("customer_plain")).collect()
+        assert got.collect() == want and len(want) == 25
+    finally:
+        spark.catalog.dropTempView("customer_plain")
+        engine.cache.clear()

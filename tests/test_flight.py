@@ -128,8 +128,11 @@ def test_do_get_streaming_path_parity_and_no_cliff(spark, monkeypatch):
     bound of 0) on the same 600k-row table: bytes served
     must be IDENTICAL to the fast path, and the cost must stay within a
     small constant of toArrow (the pack round trip + sequential
-    per-partition jobs — ~3x on 3 partitions, never the old
-    row-at-a-time ~10-100x cliff)."""
+    per-partition jobs, never the old row-at-a-time ~10-100x cliff).
+    The engine stores this table as one partition (its estimate is
+    below the advisory partition size), so the stream is one partition
+    job here; ``test_sql_ticket_adaptive_parity_multi_partition``
+    covers a stream of several partitions."""
     import time
 
     from iceberg_cache_spark.serving import flight as fl
@@ -168,6 +171,28 @@ def test_flight_bad_sql_surfaces_error(server):
     client = flight.connect(location)
     with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND|cannot be found"):
         client.do_get(flight.Ticket(b"sql:SELECT * FROM nope")).read_all()
+
+
+def test_stream_error_reaches_the_client(server):
+    """A Spark job that fails inside a reply stream reaches the client
+    as one bounded line that names the failure, on both read paths.
+    Spark's whole error text (stack trace included) overflows the
+    client's gRPC metadata limit, and the client then sees only
+    "received initial metadata size exceeds limit"."""
+    import pyarrow.flight as flight
+
+    location, _ = server
+    client = flight.connect(location)
+    fail = "CASE WHEN n.n_nationkey >= 0 THEN raise_error('boom-marker') END AS x"
+    streamed = (  # an outer join distrusts its estimate, so it streams
+        f"SELECT n.n_name, {fail}, r.r_name FROM nation n "
+        "LEFT JOIN region r ON n.n_regionkey = r.r_regionkey"
+    )
+    collected = f"SELECT n.n_name, {fail} FROM nation n"
+    for sql in (streamed, collected):
+        with pytest.raises(flight.FlightServerError, match="boom-marker") as err:
+            client.do_get(flight.Ticket(f"sql:{sql}".encode())).read_all()
+        assert len(str(err.value)) < 4096
 
 
 def test_estimate_distrusts_row_expanding_plans(spark, sf_dir, server):
@@ -327,9 +352,8 @@ def _ungrouped_jobs(spark) -> set[int]:
 
 def test_flight_reads_run_only_the_querys_own_jobs(spark, sf_dir):
     """A read runs its own plan and nothing else: no schema-probe job,
-    no second plan around the result. Job-free loaders keep the count
-    about the serving layer (a parquet loader's own footer read would
-    add one job to every call that loads)."""
+    no second plan around the result. Loaders that return prebuilt
+    DataFrames keep the count about the serving layer."""
     import pyarrow.flight as flight
 
     from iceberg_cache_spark.cache import CacheManager
@@ -383,6 +407,36 @@ def test_flight_reads_run_only_the_querys_own_jobs(spark, sf_dir):
         assert len(streamed) == len(own) >= 1
         assert got.num_rows == 25
         assert got.equals(want)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+        srv.shutdown()
+        engine.cache.clear()
+
+
+def test_grouped_sorted_read_over_a_small_resident_table_runs_one_job(spark, sf_dir):
+    """A small table is stored as one partition, so a GROUP BY ...
+    ORDER BY over it needs no exchange: the read is the one ``toArrow``
+    job. Stored as scanned, the same read plans a shuffle for the
+    aggregate and a range sample for the sort, 4 jobs in all."""
+    import pyarrow.flight as flight
+
+    from iceberg_cache_spark.cache import CacheManager
+
+    engine = CachedQueryEngine(spark, CacheManager(capacity_bytes=10**9))
+    engine.register_parquet("customer_tile", os.path.join(sf_dir, "customer.parquet"))
+    engine.table("customer_tile")  # resident and materialised
+    sql = (
+        "SELECT c_mktsegment, COUNT(*) AS n, SUM(c_acctbal) AS bal "
+        "FROM customer_tile GROUP BY c_mktsegment ORDER BY c_mktsegment"
+    )
+    srv = _GroupedServer(engine, "grpc://127.0.0.1:0")
+    serve_background(srv)
+    try:
+        client = flight.connect(f"grpc://127.0.0.1:{srv.port}")
+        got = client.do_get(flight.Ticket(f"sql:{sql}".encode())).read_all()
+        assert len(srv.jobs()) == 1
+        assert got.num_rows == 5
+        assert got.equals(engine.sql(sql).toArrow())
     finally:
         spark.sparkContext._jsc.clearJobGroup()
         srv.shutdown()
