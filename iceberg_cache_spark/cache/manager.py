@@ -42,8 +42,8 @@ from iceberg_cache_spark.cache.keys import CacheKey
 from iceberg_cache_spark.cache.policies import EvictionPolicy, LRUEvictionPolicy
 
 DEFAULT_CAPACITY_BYTES = 2 * 1024 * 1024 * 1024  # reference default: 2 GiB
-DEFAULT_TTL_SECONDS = 3600.0
-DEFAULT_SWEEP_SECONDS = 60.0
+TTL_SECONDS = 3600.0  # an entry idle this long is swept
+SWEEP_SECONDS = 60.0  # maintenance sweep interval
 
 
 @dataclass
@@ -66,13 +66,9 @@ class CacheManager:
         self,
         capacity_bytes: int = DEFAULT_CAPACITY_BYTES,
         policy: EvictionPolicy | None = None,
-        ttl_seconds: float = DEFAULT_TTL_SECONDS,
-        sweep_seconds: float = DEFAULT_SWEEP_SECONDS,
     ) -> None:
         self.capacity_bytes = capacity_bytes
         self.policy = policy or LRUEvictionPolicy()
-        self.ttl_seconds = ttl_seconds
-        self.sweep_seconds = sweep_seconds
         self._entries: dict[str, CacheEntry] = {}
         self._loading: dict[str, threading.Lock] = {}
         self._lock = threading.RLock()
@@ -268,7 +264,7 @@ class CacheManager:
             victims = [
                 k
                 for k, e in self._entries.items()
-                if now - e.last_accessed > self.ttl_seconds
+                if now - e.last_accessed > TTL_SECONDS
             ]
             for k in victims:
                 self._drop(k)
@@ -279,13 +275,13 @@ class CacheManager:
             self.sweep_expired()
             with self._lock:
                 if self._sweeper is not None:
-                    self._sweeper = threading.Timer(self.sweep_seconds, tick)
+                    self._sweeper = threading.Timer(SWEEP_SECONDS, tick)
                     self._sweeper.daemon = True
                     self._sweeper.start()
 
         with self._lock:
             if self._sweeper is None:
-                self._sweeper = threading.Timer(self.sweep_seconds, tick)
+                self._sweeper = threading.Timer(SWEEP_SECONDS, tick)
                 self._sweeper.daemon = True
                 self._sweeper.start()
 

@@ -228,13 +228,15 @@ class CachedQueryEngine:
 
     # -- point lookups with bloom skip (C11 consulted for real) -------------
 
-    def attach_bloom(self, table_id: str, column: str, **bloom_kwargs) -> None:
+    def attach_bloom(self, table_id: str, column: str) -> None:
         """Build a bloom index over ``column`` of the cached table, used
-        by point_lookup to prove absence without running a Spark job."""
+        by point_lookup to prove absence without running a Spark job.
+        Raises ``TypeError`` for a column type the index refuses (see
+        ``cache/bloom.py``)."""
         from iceberg_cache_spark.cache.bloom import EntryBloomIndex
 
         df = self.table(table_id)
-        self._blooms[(table_id, column)] = (df, EntryBloomIndex(df, column, **bloom_kwargs))
+        self._blooms[(table_id, column)] = (df, EntryBloomIndex(df, column))
 
     def point_lookup(self, table_id: str, column: str, value) -> DataFrame:
         """Equality lookup. If a bloom index proves the value absent the
@@ -245,7 +247,9 @@ class CachedQueryEngine:
         only while the table still reads as that same DataFrame. A
         commit (a new snapshot key), an invalidation or an eviction
         loads a new one, and the lookup scans until attach_bloom runs
-        again — never a stale claim of absence."""
+        again — never a stale claim of absence. A probe whose Python
+        type is not the column's (``None``, ``True``, ``"5"`` into a
+        long column) also scans."""
         df = self.table(table_id)
         built_over, bloom = self._blooms.get((table_id, column), (None, None))
         if built_over is df and bloom.definitely_absent(value):

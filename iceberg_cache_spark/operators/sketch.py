@@ -5,9 +5,10 @@ Build: d seed rows × w buckets; each key increments one cell per seed
 d·w rows regardless of input size). Estimate: min over seeds of the
 key's cell counts — a one-sided overestimate (classic CMS guarantee).
 
-Hashing is the repo's portable md5 scheme (same int on JVM, DuckDB,
-and Python — see cache/bloom.py), so sketches are reproducible across
-engines and the build is oracle-checkable.
+Hashing is a portable md5 scheme, ``_bucket_expr`` on the JVM and its
+mirror ``_bucket_py`` in Python, the only copy in the repo: the same
+bucket comes out of Spark, DuckDB and Python, so sketches are
+reproducible across engines and the build is oracle-checkable.
 """
 
 from __future__ import annotations

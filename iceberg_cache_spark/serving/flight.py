@@ -40,7 +40,7 @@ from pyspark.util import _local_iterator_from_socket
 
 from iceberg_cache_spark.engine import CachedQueryEngine
 
-DEFAULT_BATCH_SIZE = 10_000
+BATCH_SIZE = 10_000  # most rows in one reply batch (the reference's size)
 # Longest error text a failing reply stream sends. gRPC carries it in
 # the status metadata, and a client rejects metadata above its limit
 # (8 KB by default) without showing any of it.
@@ -228,12 +228,10 @@ class SparkFlightServer(flight.FlightServerBase):
         self,
         engine: CachedQueryEngine,
         location: str = "grpc://0.0.0.0:8815",
-        batch_size: int = DEFAULT_BATCH_SIZE,
     ) -> None:
         super().__init__(location)
         self.engine = engine
         self.location = location
-        self.batch_size = batch_size
 
     # -- resolution --------------------------------------------------------
 
@@ -258,9 +256,9 @@ class SparkFlightServer(flight.FlightServerBase):
         df = self._resolve(name)
         schema = _df_schema(df)
         if _estimated_bytes(df) <= _collect_bound(df) and _estimate_trustworthy(df):
-            gen = _materialized_batches(df, self.batch_size)
+            gen = _materialized_batches(df, BATCH_SIZE)
         else:
-            gen = _batches(df, self.batch_size)
+            gen = _batches(df, BATCH_SIZE)
         return flight.GeneratorStream(schema, _in_callers_context(df, _bounded_errors(gen)))
 
     def list_flights(self, context, criteria):  # noqa: D102

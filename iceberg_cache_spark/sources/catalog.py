@@ -227,19 +227,17 @@ class SnapshotParquetCatalog:
         partition_filter: dict[str, object] | None = None,
         columns: list[str] | None = None,
     ) -> DataFrame:
-        files = self.get_data_files(
-            table_id, partition_filter, snapshot_id, as_of_timestamp_ms
-        )
+        """The snapshot's files, read whole: ``partition_filter`` becomes
+        a Spark filter, and parquet pushdown skips the row groups whose
+        min/max exclude it, the pruning ``get_data_files`` would do from
+        the footers. So no footer is opened here, and the schema is the
+        snapshot's whatever the filter keeps."""
+        snap = self.get_snapshot(table_id, snapshot_id, as_of_timestamp_ms)
         # mergeSchema: appended snapshots may add columns (schema
         # evolution — the reference's design-doc aspiration, ref
         # docs/arrow_iceberg_cache_design.md:126-133, never implemented
         # there); older files surface the new columns as nulls.
-        reader = self.spark.read.option("mergeSchema", "true")
-        if not files:
-            snap = self.get_snapshot(table_id, snapshot_id, as_of_timestamp_ms)
-            df = reader.parquet(*snap.files).limit(0)
-        else:
-            df = reader.parquet(*[f.file_path for f in files])
+        df = self.spark.read.option("mergeSchema", "true").parquet(*snap.files)
         for col_name, value in (partition_filter or {}).items():
             df = df.filter(df[col_name] == value)
         if columns:

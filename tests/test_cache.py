@@ -14,6 +14,7 @@ from iceberg_cache_spark.cache import (
     LFUEvictionPolicy,
     LRUEvictionPolicy,
 )
+from iceberg_cache_spark.cache import manager
 from iceberg_cache_spark.cache.manager import CacheEntry
 
 
@@ -153,8 +154,9 @@ def test_lookup_serves_covering_entries_to_projections_only():
     assert (m.stats()["hits"], m.stats()["misses"]) == (1, 1)
 
 
-def test_ttl_sweep():
-    m = CacheManager(capacity_bytes=1000, ttl_seconds=10)
+def test_ttl_sweep(monkeypatch):
+    monkeypatch.setattr(manager, "TTL_SECONDS", 10)
+    m = CacheManager(capacity_bytes=1000)
     m.put("a", FakeDF(), 10)
     m.put("b", FakeDF(), 10)
     m._entries["a"].last_accessed = time.time() - 100
@@ -177,8 +179,10 @@ def test_get_or_load_loads_once(spark):
     m.clear()
 
 
-def test_maintenance_thread_lifecycle():
-    m = CacheManager(capacity_bytes=1000, sweep_seconds=0.05, ttl_seconds=0.01)
+def test_maintenance_thread_lifecycle(monkeypatch):
+    monkeypatch.setattr(manager, "SWEEP_SECONDS", 0.05)
+    monkeypatch.setattr(manager, "TTL_SECONDS", 0.01)
+    m = CacheManager(capacity_bytes=1000)
     m.put("a", FakeDF(), 10)
     m.start_maintenance()
     time.sleep(0.2)
@@ -195,11 +199,25 @@ def test_bloom_index_fp_rate(spark):
     from iceberg_cache_spark.cache.bloom import EntryBloomIndex
 
     df = spark.range(0, 1000).selectExpr("CAST(id AS STRING) AS s")
-    idx = EntryBloomIndex(df, "s", num_bits=1 << 16)
+    idx = EntryBloomIndex(df, "s")
     assert all(idx.might_contain(str(i)) for i in range(0, 1000, 50))  # no FN
     fps = sum(idx.might_contain(str(i)) for i in range(100_000, 101_000))
     assert fps / 1000 < 0.05
     assert idx.definitely_absent("nope-definitely-not-there")
+
+
+def test_bloom_index_fp_rate_at_300k_keys(spark):
+    """At most 5% false positives over 2,000 absent keys with 300k keys
+    present: the filter is sized by the entry's row count (a fixed
+    2^20-bit filter with 5 hashes gives about 25% here)."""
+    from iceberg_cache_spark.cache.bloom import EntryBloomIndex
+
+    df = spark.range(0, 300_000).withColumnRenamed("id", "k").persist()
+    idx = EntryBloomIndex(df, "k")
+    assert all(idx.might_contain(i) for i in range(0, 300_000, 150))  # no FN
+    fps = sum(idx.might_contain(i) for i in range(10**9, 10**9 + 2000))
+    assert fps / 2000 <= 0.05
+    df.unpersist()
 
 
 def test_concurrent_get_or_load_loads_once(spark):

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
+
+from pyspark.sql import functions as F
 
 from iceberg_cache_spark.cache import CacheManager
 from iceberg_cache_spark.engine import CachedQueryEngine
@@ -111,7 +114,7 @@ def test_point_lookup_with_bloom_skip(spark, sf_dir, engine):
     import os as _os
 
     engine.register_parquet("customer", _os.path.join(sf_dir, "customer.parquet"))
-    engine.attach_bloom("customer", "c_custkey", num_bits=1 << 16)
+    engine.attach_bloom("customer", "c_custkey")
     present = engine.point_lookup("customer", "c_custkey", 1)
     assert present.count() == 1
     absent = engine.point_lookup("customer", "c_custkey", 10**12)
@@ -119,6 +122,92 @@ def test_point_lookup_with_bloom_skip(spark, sf_dir, engine):
     # relation — no parquet scan in the plan at all
     plan = absent._jdf.queryExecution().executedPlan().toString()
     assert absent.count() == 0 and "Scan parquet" not in plan
+    engine.cache.clear()
+
+
+def _outcome(read):
+    """The rows a read returns, sorted, or the name of the error it raises."""
+    try:
+        return sorted(read().collect())
+    except Exception as e:
+        return type(e).__name__
+
+
+def test_point_lookup_never_returns_fewer_rows_than_the_scan(spark, engine):
+    """Boolean, double and timestamp columns are refused by the bloom
+    index (Python's str() of True, 1e20 and a fractional-second
+    timestamp differs from Spark's string cast, which once hid present
+    rows), and so is a case-insensitive collation; string and long
+    columns keep the skip, and an all-NULL column gets an empty filter."""
+    ts = dt.datetime(2024, 1, 1, 12, 0, 0, 250000)
+    frame = spark.createDataFrame(
+        [
+            (True, 1e20, ts, "k-1", 1 << 40, None),
+            (False, 2.5, dt.datetime(2024, 1, 2), "k-2", 7, None),
+        ],
+        "b boolean, d double, ts timestamp, s string, l long, n long",
+    ).withColumn("ci", F.collate("s", "UTF8_LCASE"))
+    engine.register_loader("typed", lambda: frame)
+    df = engine.table("typed")
+    refused = [
+        ("b", True, "boolean"),
+        ("d", 1e20, "double"),
+        ("ts", ts, "timestamp"),
+        ("ci", "K-1", "UTF8_LCASE"),
+    ]
+    for column, value, type_name in refused:
+        with pytest.raises(TypeError, match=type_name):
+            engine.attach_bloom("typed", column)
+        scan = df.filter(df[column] == value).collect()
+        assert len(scan) == 1
+        assert sorted(engine.point_lookup("typed", column, value).collect()) == sorted(scan)
+    for column, present, absent in [("s", "k-1", "k-3"), ("l", 1 << 40, 8)]:
+        engine.attach_bloom("typed", column)
+        scan = df.filter(df[column] == present).collect()
+        assert len(scan) == 1
+        assert engine.point_lookup("typed", column, present).collect() == scan
+        skipped = engine.point_lookup("typed", column, absent)
+        plan = skipped._jdf.queryExecution().executedPlan().toString()
+        assert skipped.count() == 0 and "InMemoryTableScan" not in plan
+    engine.attach_bloom("typed", "n")  # nothing to put: an empty filter
+    assert engine.point_lookup("typed", "n", 7).count() == 0
+    engine.cache.clear()
+
+
+def test_bloom_refuses_padded_char_columns(spark, engine, tmp_path):
+    """CHAR(n) stores 'ab' padded to 'ab   ', and equality still matches
+    'ab': a filter over the stored values would hide the row."""
+    spark.sql(f"CREATE TABLE bloom_char (c CHAR(5)) USING parquet LOCATION '{tmp_path / 'c'}'")
+    try:
+        spark.sql("INSERT INTO bloom_char VALUES ('ab')")
+        engine.register_loader("bloom_char", lambda: spark.table("bloom_char"))
+        with pytest.raises(TypeError, match=r"char\(5\)"):
+            engine.attach_bloom("bloom_char", "c")
+        assert engine.point_lookup("bloom_char", "c", "ab").count() == 1
+    finally:
+        engine.cache.clear()
+        spark.sql("DROP TABLE IF EXISTS bloom_char")
+
+
+def test_point_lookup_with_a_mismatched_probe_scans(spark, engine):
+    """A probe whose Python type is not the column's may still equal a
+    row under Spark's casts (or make the scan fail): the lookup answers
+    exactly as the filtered scan does."""
+    frame = spark.createDataFrame(
+        [("05", "true", 5), ("7", "false", 7)], "s string, flag string, l long"
+    )
+    engine.register_loader("t", lambda: frame)
+    df = engine.table("t")
+    for column in ("s", "flag", "l"):
+        engine.attach_bloom("t", column)
+    probes = [
+        ("s", 5), ("l", "5"), ("l", None), ("s", None), ("l", 2**70), ("flag", True), ("l", True),
+    ]
+    for column, value in probes:
+        scan = _outcome(lambda: df.filter(df[column] == value))
+        assert _outcome(lambda: engine.point_lookup("t", column, value)) == scan, (column, value)
+    assert len(_outcome(lambda: engine.point_lookup("t", "s", 5))) == 1
+    assert len(_outcome(lambda: engine.point_lookup("t", "flag", True))) == 1
     engine.cache.clear()
 
 

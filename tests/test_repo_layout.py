@@ -1,10 +1,12 @@
-"""Repository hygiene: every script under tools/ is documented, and a
-plain run of a gate never rewrites a committed record."""
+"""Repository hygiene: every script under tools/ is documented, a
+plain run of a gate never rewrites a committed record, and the public
+options of the cache, engine and server are pinned."""
 
 from __future__ import annotations
 
 import fnmatch
 import importlib.util
+import inspect
 import subprocess
 from pathlib import Path
 
@@ -46,3 +48,20 @@ def test_gate_record_without_round_is_uncommitted(gate, monkeypatch):
         ["git", "ls-files", "--", out.name], cwd=ROOT, capture_output=True, text=True
     ).stdout
     assert not tracked.strip()
+
+
+def test_public_options_are_pinned():
+    """Each parameter here is an option a caller can set. Adding one
+    should come with a measured reason, and it shows up as an edit of
+    this list."""
+    from iceberg_cache_spark.cache import CacheManager
+    from iceberg_cache_spark.engine import CachedQueryEngine
+    from iceberg_cache_spark.serving.flight import SparkFlightServer
+
+    def params(fn):
+        return [p for p in inspect.signature(fn).parameters if p != "self"]
+
+    assert params(CacheManager.__init__) == ["capacity_bytes", "policy"]
+    assert params(SparkFlightServer.__init__) == ["engine", "location"]
+    assert params(CachedQueryEngine.__init__) == ["spark", "cache"]
+    assert params(CachedQueryEngine.attach_bloom) == ["table_id", "column"]

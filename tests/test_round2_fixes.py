@@ -56,7 +56,7 @@ def test_bloom_invalidated_on_commit(spark, tmp_path):
     catalog.write_snapshot("t", spark.range(0, 10).withColumnRenamed("id", "k"))
     engine.register_catalog_table(catalog, "t")
     engine.watch_catalog(catalog, "t")
-    engine.attach_bloom("t", "k", num_bits=1 << 14)
+    engine.attach_bloom("t", "k")
     # 500 is absent pre-commit: bloom proves it, no scan
     assert engine.point_lookup("t", "k", 500).count() == 0
     # commit adds k=500; the stale bloom must not claim absence anymore
@@ -77,7 +77,7 @@ def test_bloom_bypassed_after_unwatched_commit(spark, tmp_path):
     catalog = SnapshotParquetCatalog(spark, str(tmp_path / "whu"))
     catalog.write_snapshot("t", spark.range(0, 10).withColumnRenamed("id", "k"))
     engine.register_catalog_table(catalog, "t")
-    engine.attach_bloom("t", "k", num_bits=1 << 14)
+    engine.attach_bloom("t", "k")
     assert engine.point_lookup("t", "k", 500).count() == 0
     catalog.write_snapshot(
         "t", spark.range(0, 10).withColumnRenamed("id", "k").union(
